@@ -94,17 +94,45 @@ object IndexOps {
     idx
   }
 
+  /** The stored indexes over `attribute`, sorted. Exact
+    * `<type>_<attribute>` matches only — a bare suffix test would report
+    * doc_id's indexes for an attribute named `id`. */
+  def over(e: Entity, attribute: String): Seq[String] =
+    e.listIndexes.filter(n => knownTypes.exists(tp => n == s"${tp}_$attribute")).sorted
+
   /** The reference's 8 index types (`IndexTypes.scala:20-45`). */
   val referenceTypes: Seq[String] =
     Seq("vaf", "vav", "vap", "ecp", "pq", "sh", "lsh", "mi")
 
-  /** Build every structure (reference `generateAllIndexes`). By default
-    * the FULL family, including the beyond-reference ivfpq/sq — a user
-    * asking for "all indexes" should get everything the planner can use;
-    * `extended = false` pins the reference's 8. */
-  def createAll(df: DataFrame, idCol: String, vecCol: String,
-                extended: Boolean = true): Seq[VectorIndex] =
-    (if (extended) knownTypes else referenceTypes).map(create(_, df, idCol, vecCol))
+  /** Build each of `types` over the entity's current rows and save it
+    * with its build recipe (type, attribute, id column and options), which
+    * [[refresh]] replays. By default the FULL family (reference
+    * `generateAllIndexes` plus the beyond-reference structures — "all
+    * indexes" means everything the planner can use). Indexes are named
+    * `<type>_<attribute>` unless `name` is given for a single type.
+    * Returns the saved names. */
+  def createAll(e: Entity, attribute: String, types: Seq[String] = knownTypes,
+                idCol: String = Entity.ApId, options: Map[String, String] = Map.empty,
+                name: Option[String] = None): Seq[String] = {
+    require(name.isEmpty || types.size == 1, "a custom index name takes exactly one type")
+    types.map { tp =>
+      buildAndSave(e, name.getOrElse(s"${tp}_$attribute"),
+        Map(InfoType -> tp, InfoAttribute -> attribute, InfoIdCol -> idCol) ++ options) {
+        (_, rows) => create(tp, rows, idCol, attribute, options)
+      }
+    }
+  }
+
+  /** Save what `build` makes of the entity's rows under `recipe`. The
+    * stamp is read BEFORE the build's scan and handed to the build, so
+    * rows that land meanwhile leave the index stale, never falsely
+    * fresh. */
+  private def buildAndSave(e: Entity, name: String, recipe: Map[String, String])
+                          (build: ((Int, Int), DataFrame) => VectorIndex): String = {
+    val builtAt = e.stamp
+    e.saveIndex(name, build(builtAt, e.read()), recipe, builtAt)
+    name
+  }
 
   // Persistence through the entity store (reference `Index.scala:442-471`)
   def save(e: Entity, name: String, idx: VectorIndex): Entity = e.saveIndex(name, idx)
@@ -113,7 +141,7 @@ object IndexOps {
   def drop(e: Entity, name: String): Unit = e.dropIndex(name)
 
   /** The build-recipe keys [[refresh]] consumes next to the per-type
-    * options: recorded by the wire handlers at create time. */
+    * options, recorded by [[createAll]]. */
   val InfoType = "indextype"
   val InfoAttribute = "attribute"
   val InfoIdCol = "idcol"
@@ -130,18 +158,18 @@ object IndexOps {
     val attribute = info.getOrElse(InfoAttribute, throw new IllegalStateException(
       s"index $name records no attribute — drop and recreate it"))
     val idCol = info.getOrElse(InfoIdCol, Entity.ApId)
-    // Incremental maintenance when it is provably sound: the graph index
-    // can absorb appended rows in place, and "append-only since save"
-    // is exactly "saved stamp has the same entity version" (delete /
-    // vacuum / sparsify bump the version; inserts only move the count).
-    // A negative saved count means the index was built mid-insert —
-    // rebuild rather than reason about the pending window.
-    val incremental = tp.toLowerCase == "nsw" &&
-      e.indexSavedStamp(name).exists(s => s._1 == e.stamp._1 && s._2 >= 0)
-    val idx =
+    buildAndSave(e, name, info) { (builtAt, rows) =>
+      // Incremental maintenance when it is provably sound: the graph
+      // index can absorb appended rows in place, and "append-only since
+      // save" is exactly "saved stamp has the same entity version"
+      // (delete / vacuum / sparsify bump the version; inserts only move
+      // the count). A negative saved count means the index was built
+      // mid-insert — rebuild rather than reason about the pending window.
+      val incremental = tp.toLowerCase == "nsw" &&
+        e.indexSavedStamp(name).exists(s => s._1 == builtAt._1 && s._2 >= 0)
       if (incremental) {
         val nsw = e.loadIndex(name).index.asInstanceOf[NSWIndex]
-        val appended = e.read().join(
+        val appended = rows.join(
           nsw.graph.select(col("id").as(idCol)), Seq(idCol), "left_anti")
         nsw.extend(appended, idCol, attribute)
       } else {
@@ -156,10 +184,9 @@ object IndexOps {
             opts + ("heuristic" -> (if (e.loadIndex(name).index
               .asInstanceOf[NSWIndex].heuristic) "1" else "0"))
           else opts
-        create(tp, e.read(), idCol, attribute, pinned)
+        create(tp, rows, idCol, attribute, pinned)
       }
-    e.saveIndex(name, idx, info)
-    name
+    }
   }
 
   /** Refresh every stale index of the entity; returns refreshed names. */
@@ -317,6 +344,50 @@ object QueryOps {
   def planned(entity: DataFrame, idCol: String, indexes: Seq[VectorIndex],
               hints: Seq[Planner.Hint], nnq: NnQuery): DataFrame =
     runPlan(choosePlan(entity, indexes, hints, nnq), entity, idCol, nnq)
+
+  /** A routed query: its lazy result frame, the source that serves it
+    * (`index scan (<name>)`, a planner plan such as `index:vaf`,
+    * `sequential scan`, `boolean filter + sequential scan` or `boolean
+    * scan`), the kNN plan that runs, and whether the named stored index
+    * it reads is stale. */
+  final case class Routed(frame: DataFrame, source: String,
+                          plan: Option[Planner.Plan], stale: Boolean)
+
+  /** The one kNN/Boolean router behind both front doors, over `frame` (a
+    * read of `entity`). A kNN query without predicates takes, in order: a
+    * named stored index (`index`, else the first hint naming one), the
+    * planner's walk of the remaining hints over the entity's fresh
+    * indexes, the sequential scan. With predicates it is a filtered kNN;
+    * without a kNN query, a Boolean scan. A stale named index still
+    * serves and is flagged — refusing it is the caller's policy. */
+  def route(entity: Entity, frame: DataFrame, idCol: String, nnq: Option[NnQuery],
+            predicates: Seq[BooleanPredicates.Predicate], hints: Seq[String],
+            index: Option[String]): Routed = (nnq, predicates) match {
+    case (Some(q), Nil) =>
+      val named = index.orElse(
+        if (hints.isEmpty) None else { val stored = entity.listIndexes; hints.find(stored.contains) })
+      val plannerHints = Planner.hintsByName(hints)
+      named match {
+        case Some(name) =>
+          val loaded = entity.loadIndex(name)
+          Routed(this.index(frame, idCol, loaded.index, q), s"index scan ($name)",
+            Some(Planner.IndexPlan(loaded.index)), loaded.stale)
+        case None if plannerHints.nonEmpty =>
+          // a sequential-only walk never touches the index store
+          val indexes =
+            if (plannerHints.forall(_ == Planner.SequentialHint)) Nil else entity.freshIndexes
+          val plan = choosePlan(frame, indexes, plannerHints, q)
+          Routed(runPlan(plan, frame, idCol, q), plan.describe, Some(plan), stale = false)
+        case None =>
+          Routed(sequential(frame, idCol, q), "sequential scan",
+            Some(Planner.SequentialPlan()), stale = false)
+      }
+    case (Some(q), ps) => Routed(filteredKnn(frame, idCol, ps, q),
+      "boolean filter + sequential scan", Some(Planner.SequentialPlan()), stale = false)
+    case (None, ps) if ps.nonEmpty =>
+      Routed(booleanQuery(frame, ps), "boolean scan", None, stale = false)
+    case _ => throw new IllegalArgumentException("query needs nnq and/or bq")
+  }
 
   /** Boolean query (reference `QueryOp.booleanQuery`). */
   def booleanQuery(entity: DataFrame, predicates: Seq[BooleanPredicates.Predicate]): DataFrame =

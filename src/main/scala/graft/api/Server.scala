@@ -10,15 +10,23 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, round}
+import org.apache.spark.sql.types.StructType
 
 import graft.core.{Entity, Partitioning}
-import graft.operators.BooleanPredicates
+import graft.operators.{BooleanPredicates, SetAlgebra}
 
 /** Thin JSON-over-HTTP front door wrapping the programmatic API — the
   * seam the reference fills with gRPC (`communication/rpc/
   * DataDefintion.scala`, `DataQuery.scala`; SURVEY §7.1 scoped the
   * transport out, this closes the gap without adding dependencies: the
   * JDK's `com.sun.net.httpserver` + the Jackson that ships with Spark).
+  *
+  * Shared request concepts — kNN/Boolean routing ([[QueryOps.route]]),
+  * set algebra, partitioner names, index build-and-save ([[IndexOps]])
+  * and per-entity mutation locking ([[Entity]]) — live behind both this
+  * door and the gRPC one, which accept the same spellings. The one policy
+  * that differs: gRPC refuses a stale named index, this door serves it
+  * and flags it.
   *
   * One POST endpoint per RPC, JSON request/response. Query results are
   * rendered through Spark's own JSON encoder (`df.toJSON`) and capped at
@@ -43,7 +51,8 @@ import graft.operators.BooleanPredicates
   * | /query/text       | {entity, textCol, mode: all|any|phrase|bm25      |
   * |                   |  |bm25_indexed, terms: [..], idCol? k? (bm25*)}  |
   * | /query/knn        | {entity, idCol, vecCol, q: [x,…], dist?, k?,     |
-  * |                   |  index? (stored index name; exact rerank),       |
+  * |                   |  index? (stored index name; exact rerank; a      |
+  * |                   |  stale index serves, flagged `stale: true`),     |
   * |                   |  hints? (planner hint names, walked in order)}   |
   * | /query/page       | {pageToken}                                      |
   * | /entity/insert/stream | newline-delimited JSON rows (body streamed)  |
@@ -102,9 +111,10 @@ import graft.operators.BooleanPredicates
   * | /index/details        | {entity, name} — type, stale, build recipe   |
   * | /entity/vacuum        | {name, partitions?}                          |
   * | /entity/sparsify      | {name, vecCol}                               |
-  * | /entity/partition     | {name, mode: hash|random|ecp|column|zorder,  |
-  * |                       |  n?, cols?/vecCol?/keyCol?}                  |
-  * | /index/partition      | {entity, name, mode, …} — index relation     |
+  * | /entity/partition     | {name, mode: hash|random|ecp|column (alias   |
+  * |                       |  bycolumn)|zorder|tile, n?,                  |
+  * |                       |  cols?/vecCol?/keyCol?, cell?}               |
+  * | /index/partition      | {entity, name, mode: hash|random, n?, cols?} |
   * | /entity/storage       | {name, attributes: [..], handler}            |
   * | /storagehandlers/list | {}                                           |
   * | /entity/indexall      | {entity, vecCol, idCol?, extended?}          |
@@ -112,8 +122,9 @@ import graft.operators.BooleanPredicates
   * | /import               | {name, format, path}                         |
   * | /export               | {name, format, path}                         |
   * | /search/compound      | {idCol, tree: {op: knn|boolean|union|        |
-  * |                       |  intersect|except|fuzzy_union|               |
-  * |                       |  fuzzy_intersect, …, left?, right?}}         |
+  * |                       |  intersect (alias join)|except|fuzzy_union   |
+  * |                       |  (alias fuzzyunion)|fuzzy_intersect (alias   |
+  * |                       |  fuzzyintersect), …, left?, right?}}         |
   * | /pipeline/pack        | {entity, idCol, tokenCol, budget?, shards?,  |
   * |                       |  rows?: true → (doc, chunk) boundary map}    |
   * | /pipeline/components  | {entity, textCol, idCol, threshold?}         |
@@ -142,17 +153,26 @@ class Server private(spark: SparkSession, base: String, http: HttpServer,
                      maxResults: Int) {
 
   def port: Int = http.getAddress.getPort
-  def stop(): Unit = http.stop(0)
+
+  /** Handler threads, named `graft-http-<port>-<n>`. Daemon threads, so a
+    * JVM whose main returns can exit; [[stop]] shuts them down. Handlers
+    * run concurrently: `Entity` serializes mutations per entity itself. */
+  private val threads = new java.util.concurrent.atomic.AtomicInteger()
+  private[api] val pool = java.util.concurrent.Executors.newFixedThreadPool(4, { (r: Runnable) =>
+    val t = new Thread(r, s"graft-http-$port-${threads.incrementAndGet()}")
+    t.setDaemon(true)
+    t
+  })
+
+  /** Stop listening, then end the handler threads (running handlers get
+    * five seconds to finish). */
+  def stop(): Unit = {
+    http.stop(0)
+    pool.shutdown()
+    pool.awaitTermination(5, java.util.concurrent.TimeUnit.SECONDS)
+  }
 
   private val mapper = new ObjectMapper()
-
-  // The http executor runs handlers concurrently but Entity mutation is
-  // read-modify-write on the catalog meta — serialize mutations per
-  // entity (reads stay concurrent; a reader mid-swap sees the old
-  // version, which the versioned layout makes safe).
-  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def withEntityLock[T](name: String)(f: => T): T =
-    locks.computeIfAbsent(name, _ => new Object).synchronized(f)
 
   private def handle(ex: HttpExchange): Unit = ex.getRequestURI.getPath match {
     // the browser console (reference web UI role): one static page over
@@ -213,48 +233,49 @@ class Server private(spark: SparkSession, base: String, http: HttpServer,
         reqField(p, "values").elements().asScala.map(jsonScalar).toSeq)
     }.toSeq
 
-  /** Evaluate a /search/compound tree node to an `(idCol, distance)`
-    * frame — the HTTP twin of the gRPC compound FROM expression
-    * (reference `MessageParser.toExpression`). Leaves: `knn` (exact
-    * sequential scan, or a stored index with exact rerank when `index`
-    * is given) and `boolean` (conjunctive predicates, distance 0).
-    * Inner nodes: union | intersect | except | fuzzy_union |
-    * fuzzy_intersect over the two subtrees. */
-  private def compoundFrame(node: JsonNode, idCol: String): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    import graft.operators.SetAlgebra
-    val dc = graft.operators.Knn.DistanceCol
-    def normalized(df: DataFrame): DataFrame =
-      if (df.columns.contains(dc)) df.select(col(idCol), col(dc).as("distance"))
-      else df.select(col(idCol)).withColumn("distance", lit(0.0))
+  /** kNN query fields: `vecCol`, `q`, `dist?` (euclidean), `k?` (10). */
+  private def nnqOf(req: JsonNode): NnQuery =
+    NnQuery(reqField(req, "vecCol").asText(),
+      reqField(req, "q").elements().asScala.map(_.asDouble()).toSeq,
+      if (req.has("dist")) reqField(req, "dist").asText() else "euclidean",
+      if (req.has("k")) reqField(req, "k").asInt() else 10)
+
+  private def hintsOf(req: JsonNode): Seq[String] =
+    if (req.has("hints")) reqField(req, "hints").elements().asScala.map(_.asText()).toSeq
+    else Nil
+
+  /** A kNN request (`index?` names a stored index, `hints?` are walked in
+    * order) through the shared router. */
+  private def knnRouted(req: JsonNode, e: Entity, idCol: String): QueryOps.Routed =
+    QueryOps.route(e, e.read(), idCol, Some(nnqOf(req)), Nil, hintsOf(req),
+      if (req.has("index")) Some(reqField(req, "index").asText()) else None)
+
+  /** Evaluate a /search/compound tree node — the HTTP twin of the gRPC
+    * compound FROM expression (reference `MessageParser.toExpression`).
+    * Leaves: `knn` (routed like /query/knn) and `boolean` (conjunctive
+    * predicates). Inner nodes combine the two subtrees through
+    * [[SetAlgebra.combine]]. */
+  private def compoundFrame(node: JsonNode, idCol: String): DataFrame =
     reqField(node, "op").asText() match {
-      case "knn" =>
-        val e = entity(node, "entity")
-        val q = reqField(node, "q").elements().asScala.map(_.asDouble()).toSeq
-        val nnq = NnQuery(reqField(node, "vecCol").asText(), q,
-          if (node.has("dist")) node.get("dist").asText() else "euclidean",
-          if (node.has("k")) node.get("k").asInt() else 10)
-        normalized(
-          if (node.has("index"))
-            QueryOps.index(e.read(), idCol,
-              e.loadIndex(node.get("index").asText()).index, nnq)
-          else QueryOps.sequential(e.read(), idCol, nnq))
+      case "knn" => knnRouted(node, entity(node, "entity"), idCol).frame
       case "boolean" =>
-        normalized(entity(node, "entity").read()
-          .filter(BooleanPredicates.conjunction(predicatesOf(node))))
-      case combine =>
-        val l = compoundFrame(reqField(node, "left"), idCol)
-        val r = compoundFrame(reqField(node, "right"), idCol)
-        combine match {
-          case "union" => SetAlgebra.union(l, r, idCol)
-          case "intersect" => SetAlgebra.intersect(l, r, idCol)
-          case "except" => SetAlgebra.except(l, r, idCol)
-          case "fuzzy_union" => SetAlgebra.fuzzyUnion(l, r, idCol)
-          case "fuzzy_intersect" => SetAlgebra.fuzzyIntersect(l, r, idCol)
-          case other =>
-            throw new IllegalArgumentException(s"unknown compound op: $other")
-        }
+        QueryOps.booleanQuery(entity(node, "entity").read(), predicatesOf(node))
+      case op => SetAlgebra.combine(op, compoundFrame(reqField(node, "left"), idCol),
+        compoundFrame(reqField(node, "right"), idCol), idCol)
     }
+
+  /** JSON rows as a frame to insert into `e`. Once the entity holds data
+    * the rows are read against its stored user schema (`ap_*` system
+    * columns dropped): inferring would widen `int` to `bigint` and
+    * `array<float>` to `array<double>`, and the insert would rewrite the
+    * whole entity to the drifted schema. The first insert, and rows
+    * naming a column the entity lacks, infer types. */
+  private def jsonRows(e: Entity, rows: Seq[String]): DataFrame = {
+    val ds = spark.createDataset(rows)(Encoders.STRING)
+    val stored = StructType(e.read().schema.filterNot(_.name.startsWith("ap_")))
+    val named = rows.iterator.flatMap(r => mapper.readTree(r).fieldNames().asScala).toSet
+    if (stored.isEmpty || !named.subsetOf(stored.fieldNames.toSet)) spark.read.json(ds)
+    else spark.read.schema(stored).json(ds)
   }
 
   private def jsonScalar(n: JsonNode): Any =
@@ -304,7 +325,7 @@ class Server private(spark: SparkSession, base: String, http: HttpServer,
     val stamp = e.stamp
     if (textIndexStamps.get(key) != stamp ||
         !graft.sources.FullTextStore.exists(dir)) {
-      withEntityLock(name) {
+      e.exclusively {
         graft.sources.FullTextStore.write(spark, dir, e.read(), idCol, textCol)
         textIndexStamps.put(key, stamp)
       }
@@ -370,8 +391,8 @@ class Server private(spark: SparkSession, base: String, http: HttpServer,
         ack.put("batch", batchNo)
         ack.put("rows", buf.size)
         try {
-          val df = spark.read.json(spark.createDataset(buf.toSeq)(Encoders.STRING))
-          withEntityLock(name) { Entity.open(spark, base, name).insert(df) }
+          val e = Entity.open(spark, base, name)
+          e.insert(jsonRows(e, buf.toSeq))
           total += buf.size
           ack.put("code", "OK")
         } catch {
@@ -417,12 +438,8 @@ class Server private(spark: SparkSession, base: String, http: HttpServer,
       val req = mapper.readTree(body)
       val e = entity(req, "entity")
       val idCol = reqField(req, "idCol").asText()
-      val nnq = NnQuery(reqField(req, "vecCol").asText(),
-        reqField(req, "q").elements().asScala.map(_.asDouble()).toSeq,
-        if (req.has("dist")) reqField(req, "dist").asText() else "euclidean",
-        if (req.has("k")) reqField(req, "k").asInt() else 10)
-      val indexes = e.listIndexes.map(n => e.loadIndex(n))
-        .filterNot(_.stale).map(_.index)
+      val nnq = nnqOf(req)
+      val indexes = e.freshIndexes
       val frame = e.read()
 
       ex.getResponseHeaders.set("Content-Type", "application/x-ndjson")
@@ -478,10 +495,7 @@ class Server private(spark: SparkSession, base: String, http: HttpServer,
         }
         n
       }
-      val hints =
-        if (req.has("hints")) graft.plans.Planner.hintsByName(
-          reqField(req, "hints").elements().asScala.map(_.asText()).toSeq)
-        else Nil
+      val hints = graft.plans.Planner.hintsByName(hintsOf(req))
       if (req.has("timedDeadlineMs")) {
         // best-by-deadline: single winning observation (QueryOp.timedParallel)
         val best = QueryOps.timedParallel(spark, frame, idCol, indexes, nnq,
@@ -515,14 +529,12 @@ class Server private(spark: SparkSession, base: String, http: HttpServer,
     val out = mapper.createObjectNode()
     path match {
       case "/entity/create" =>
-        withEntityLock(reqField(req, "name").asText()) {
-          Entity.create(spark, base, reqField(req, "name").asText())
-        }
+        Entity.create(spark, base, reqField(req, "name").asText())
         out.put("name", reqField(req, "name").asText())
       case "/entity/insert" =>
         val rows = reqField(req, "rows").elements().asScala.map(_.toString).toSeq
-        val df = spark.read.json(spark.createDataset(rows)(Encoders.STRING))
-        withEntityLock(reqField(req, "name").asText()) { entity(req).insert(df) }
+        val e = entity(req)
+        e.insert(jsonRows(e, rows))
         out.put("inserted", rows.size)
       case "/entity/list" =>
         val arr = out.putArray("entities")
@@ -544,11 +556,7 @@ class Server private(spark: SparkSession, base: String, http: HttpServer,
         val arr = out.putArray("versions")
         entity(req).versions.foreach(arr.add)
       case "/entity/retain" =>
-        // read-modify-write of entity meta: must serialize with other
-        // mutations on the same entity, like every mutating endpoint
-        withEntityLock(reqField(req, "name").asText()) {
-          entity(req).retainVersions(reqField(req, "keep").asInt())
-        }
+        entity(req).retainVersions(reqField(req, "keep").asInt())
         out.put("retain", reqField(req, "keep").asInt())
       case "/entity/diff" =>
         // row-level diff between two retained snapshots, keyed
@@ -560,38 +568,28 @@ class Server private(spark: SparkSession, base: String, http: HttpServer,
         // row count of a retained snapshot version
         out.put("count", entity(req).readVersion(reqField(req, "version").asInt()).count())
       case "/entity/delete" =>
-        out.put("deleted", withEntityLock(reqField(req, "name").asText()) {
-          entity(req).deleteWhere(BooleanPredicates.conjunction(predicatesOf(req)))
-        })
+        out.put("deleted",
+          entity(req).deleteWhere(BooleanPredicates.conjunction(predicatesOf(req))))
       case "/entity/preview" =>
         val k = if (req.has("k")) reqField(req, "k").asInt() else 100
         out.set("rows", rowsNode(entity(req).read().limit(k)))
       case "/entity/drop" =>
-        withEntityLock(reqField(req, "name").asText()) { entity(req).drop() }
+        entity(req).drop()
         out.put("dropped", reqField(req, "name").asText())
       case "/index/create" =>
-        withEntityLock(reqField(req, "entity").asText()) {
-          val e = entity(req, "entity")
-          // optional per-type build parameters, same contract as the
-          // gRPC IndexMessage.options map
-          val options = Option(req.get("options")).map(o =>
-            o.fields().asScala.map(en =>
-              en.getKey -> en.getValue.asText()).toMap).getOrElse(Map.empty)
-          val idx = IndexOps.create(reqField(req, "type").asText(), e.read(),
-            reqField(req, "idCol").asText(), reqField(req, "vecCol").asText(), options)
-          // recorded build recipe → IndexOps.refresh rebuilds a stale
-          // index with the original tuning
-          e.saveIndex(reqField(req, "name").asText(), idx, Map(
-            IndexOps.InfoType -> reqField(req, "type").asText(),
-            IndexOps.InfoAttribute -> reqField(req, "vecCol").asText(),
-            IndexOps.InfoIdCol -> reqField(req, "idCol").asText()) ++ options)
-        }
-        out.put("index", reqField(req, "name").asText())
+        // optional per-type build parameters, same contract as the gRPC
+        // IndexMessage.options map; the recorded build recipe lets
+        // /index/refresh rebuild a stale index with the original tuning
+        val options = Option(req.get("options")).map(o =>
+          o.fields().asScala.map(en =>
+            en.getKey -> en.getValue.asText()).toMap).getOrElse(Map.empty[String, String])
+        out.put("index", IndexOps.createAll(entity(req, "entity"),
+          reqField(req, "vecCol").asText(), Seq(reqField(req, "type").asText()),
+          reqField(req, "idCol").asText(), options,
+          Some(reqField(req, "name").asText())).head)
       case "/index/refresh" =>
-        withEntityLock(reqField(req, "entity").asText()) {
-          out.put("index",
-            IndexOps.refresh(entity(req, "entity"), reqField(req, "name").asText()))
-        }
+        out.put("index",
+          IndexOps.refresh(entity(req, "entity"), reqField(req, "name").asText()))
       case "/index/list" =>
         val arr = out.putArray("indexes")
         entity(req, "entity").listIndexes.foreach(arr.add)
@@ -621,54 +619,24 @@ class Server private(spark: SparkSession, base: String, http: HttpServer,
           idCol = if (req.has("idCol")) reqField(req, "idCol").asText() else "",
           k = if (req.has("k")) reqField(req, "k").asInt() else 10))
       case "/query/knn" =>
-        val e = entity(req, "entity")
-        val q = reqField(req, "q").elements().asScala.map(_.asDouble()).toSeq
-        val nnq = NnQuery(reqField(req, "vecCol").asText(), q,
-          if (req.has("dist")) reqField(req, "dist").asText() else "euclidean",
-          if (req.has("k")) reqField(req, "k").asInt() else 10)
+        // a stored index serves even when stale and reports it; with
+        // hints, `plan` is the plan that runs (chosen once: a second walk
+        // could diverge when concurrent queries record planner
+        // measurements in between)
         val idCol = reqField(req, "idCol").asText()
-        val result =
-          if (req.has("index")) {
-            val loaded = e.loadIndex(reqField(req, "index").asText())
-            out.put("stale", loaded.stale)
-            QueryOps.index(e.read(), idCol, loaded.index, nnq)
-          } else if (req.has("hints")) {
-            // reference QueryMessage.hints: names walked in order by the
-            // planner over the entity's fresh stored indexes. Indexes
-            // load lazily — a sequential-only hint walk never touches
-            // the index store. The plan is chosen ONCE: the reported
-            // `plan` field is the plan that executes (a second walk
-            // could diverge when concurrent queries record planner
-            // measurements between the two calls).
-            val hints = graft.plans.Planner.hintsByName(
-              reqField(req, "hints").elements().asScala.map(_.asText()).toSeq)
-            val frame = e.read()
-            val indexes =
-              if (hints.forall(_ == graft.plans.Planner.SequentialHint)) Nil
-              else e.listIndexes.map(e.loadIndex).filterNot(_.stale).map(_.index)
-            val plan = QueryOps.choosePlan(frame, indexes, hints, nnq)
-            out.put("plan", plan.describe)
-            QueryOps.runPlan(plan, frame, idCol, nnq)
-          } else QueryOps.sequential(e.read(), idCol, nnq)
-        pagedRows(out, result.select(col(idCol), col("distance")))
+        val routed = knnRouted(req, entity(req, "entity"), idCol)
+        if (req.has("index")) out.put("stale", routed.stale)
+        if (req.has("hints")) routed.plan.foreach(p => out.put("plan", p.describe))
+        pagedRows(out, routed.frame.select(col(idCol), col("distance")))
       case "/query/explain" =>
         // formatted physical plan of a kNN or boolean query WITHOUT
         // running it — lets users confirm pushdown/top-k/index shapes
         val e = entity(req, "entity")
         val df = reqField(req, "mode").asText() match {
-          case "knn" =>
-            val q = reqField(req, "q").elements().asScala.map(_.asDouble()).toSeq
-            val nnq = NnQuery(reqField(req, "vecCol").asText(), q,
-              if (req.has("dist")) reqField(req, "dist").asText() else "euclidean",
-              if (req.has("k")) reqField(req, "k").asInt() else 10)
-            // same routing as /query/knn: an index parameter explains the
-            // index-served plan, not the sequential scan
-            if (req.has("index"))
-              QueryOps.index(e.read(), reqField(req, "idCol").asText(),
-                e.loadIndex(reqField(req, "index").asText()).index, nnq)
-            else QueryOps.sequential(e.read(), reqField(req, "idCol").asText(), nnq)
-          case "boolean" =>
-            e.read().filter(BooleanPredicates.conjunction(predicatesOf(req)))
+          // same routing as /query/knn: an index or hints explain the
+          // plan that would serve, not the sequential scan
+          case "knn" => knnRouted(req, e, reqField(req, "idCol").asText()).frame
+          case "boolean" => QueryOps.booleanQuery(e.read(), predicatesOf(req))
           case other => throw new IllegalArgumentException(s"unknown mode: $other")
         }
         out.put("plan", df.queryExecution.explainString(
@@ -1250,9 +1218,7 @@ class Server private(spark: SparkSession, base: String, http: HttpServer,
           out.put("handler", group.map(_.handler).getOrElse("parquet"))
           out.put("store", group.map(_.store).getOrElse(""))
           val arr = out.putArray("indexes")
-          e.listIndexes.filter(n =>
-              IndexOps.knownTypes.exists(tp => n == s"${tp}_$attribute"))
-            .sorted.foreach(arr.add)
+          IndexOps.over(e, attribute).foreach(arr.add)
         } else {
           val (version, inserts) = e.stamp
           out.put("count", e.count())
@@ -1286,85 +1252,51 @@ class Server private(spark: SparkSession, base: String, http: HttpServer,
         // reference web `GET /entity/vacuum`: compact small part files
         val parts =
           if (req.has("partitions")) reqField(req, "partitions").asInt() else 8
-        withEntityLock(reqField(req, "name").asText()) { entity(req).vacuum(parts) }
+        entity(req).vacuum(parts)
         out.put("partitions", parts)
       case "/entity/sparsify" =>
         // reference web `GET /entity/sparsify`: rewrite a vector column
         // to the sparse (idx, val, size) encoding
-        withEntityLock(reqField(req, "name").asText()) {
-          entity(req).sparsify(reqField(req, "vecCol").asText())
-        }
+        entity(req).sparsify(reqField(req, "vecCol").asText())
         out.put("sparsified", reqField(req, "vecCol").asText())
       case "/entity/partition" | "/index/partition" =>
         // reference web `POST /entity/partition` / `POST /index/partition`:
-        // rewrite the entity's (or a stored index's relation) physical
-        // layout. mode ∈ {hash(cols,n), random(n), ecp(vecCol,n),
-        // column(keyCol), zorder(col1,col2,n)}
-        val n = if (req.has("n")) reqField(req, "n").asInt() else 8
-        def strs(field: String): Seq[String] =
-          reqField(req, field).elements().asScala.map(_.asText()).toSeq
-        val mode = reqField(req, "mode").asText() match {
-          case "hash" => Partitioning.Hash(strs("cols"), n)
-          case "random" => Partitioning.Random(n)
-          case "ecp" => Partitioning.Ecp(reqField(req, "vecCol").asText(), n)
-          case "column" => Partitioning.ByColumn(reqField(req, "keyCol").asText())
-          case "zorder" =>
-            val cs = strs("cols")
-            require(cs.size == 2, "zorder takes exactly 2 cols")
-            Partitioning.ZOrder(cs.head, cs(1), n)
-          case "tile" =>
-            val cs = strs("cols")
-            require(cs.size == 2, "tile takes exactly 2 cols")
-            Partitioning.Tile(cs.head, cs(1), reqField(req, "cell").asDouble())
-          case other => throw new IllegalArgumentException(s"unknown mode: $other")
+        // rewrite the entity's (or a stored index's relation, hash|random
+        // only) physical layout. mode ∈ {hash(cols,n), random(n),
+        // ecp(vecCol,n), column|bycolumn(keyCol), zorder(cols,n),
+        // tile(cols,cell)}; the fields present, in that order, are the
+        // mode's columns
+        val cols = Seq("cols", "vecCol", "keyCol", "cell").filter(req.has).flatMap { f =>
+          val v = reqField(req, f)
+          if (v.isArray) v.elements().asScala.map(_.asText()).toSeq else Seq(v.asText())
         }
-        if (path == "/entity/partition") {
-          withEntityLock(reqField(req, "name").asText()) {
-            entity(req).partitionLayout(mode)
-          }
-          out.put("partitioned", reqField(req, "name").asText())
-        } else {
-          withEntityLock(reqField(req, "entity").asText()) {
-            entity(req, "entity").repartitionIndex(reqField(req, "name").asText(), mode)
-          }
-          out.put("partitioned", reqField(req, "name").asText())
-        }
+        val mode = Partitioning.parseMode(reqField(req, "mode").asText(), cols,
+          if (req.has("n")) reqField(req, "n").asInt() else 8)
+        if (path == "/entity/partition") entity(req).partitionLayout(mode)
+        else entity(req, "entity").repartitionIndex(reqField(req, "name").asText(), mode)
+        out.put("partitioned", reqField(req, "name").asText())
       case "/entity/storage" =>
         // reference web `POST /entity/storage` (transferStorageHandler):
         // move attributes to a different storage engine; subsequent reads
         // reassemble transparently by the system id
         val attrs = reqField(req, "attributes").elements().asScala.map(_.asText()).toSeq
-        withEntityLock(reqField(req, "name").asText()) {
-          entity(req).transferAttributes(attrs, reqField(req, "handler").asText())
-        }
+        entity(req).transferAttributes(attrs, reqField(req, "handler").asText())
         out.put("handler", reqField(req, "handler").asText())
         out.put("moved", attrs.size)
       case "/storagehandlers/list" =>
         // reference web `GET /storagehandlers/list`
         val arr = out.putArray("handlers")
-        (graft.sources.StorageHandlers.all.keys.toSeq ++
-          Seq("keyvalue", "compound")).sorted.foreach(arr.add)
+        graft.sources.StorageHandlers.names.foreach(arr.add)
       case "/entity/indexall" =>
         // reference web `POST /entity/indexall` (entityCreateAllIndexes):
         // build the whole family over one attribute; extended=false pins
         // the reference's 8 types
-        val e = entity(req, "entity")
-        val vecCol = reqField(req, "vecCol").asText()
-        val idCol =
-          if (req.has("idCol")) reqField(req, "idCol").asText() else Entity.ApId
         val extended = !req.has("extended") || reqField(req, "extended").asBoolean()
-        val types =
-          if (extended) IndexOps.knownTypes else IndexOps.referenceTypes
-        withEntityLock(reqField(req, "entity").asText()) {
-          types.foreach { tp =>
-            e.saveIndex(s"${tp}_$vecCol",
-              IndexOps.create(tp, e.read(), idCol, vecCol),
-              Map(IndexOps.InfoType -> tp, IndexOps.InfoAttribute -> vecCol,
-                IndexOps.InfoIdCol -> idCol))
-          }
-        }
         val arr = out.putArray("indexes")
-        types.foreach(tp => arr.add(s"${tp}_$vecCol"))
+        IndexOps.createAll(entity(req, "entity"), reqField(req, "vecCol").asText(),
+          if (extended) IndexOps.knownTypes else IndexOps.referenceTypes,
+          if (req.has("idCol")) reqField(req, "idCol").asText() else Entity.ApId)
+          .foreach(arr.add)
       case "/entity/insertdemo" =>
         // reference web `POST /entity/insertdemo` (GenerateRandomData):
         // fill with deterministic synthetic rows — fully distributed
@@ -1377,7 +1309,7 @@ class Server private(spark: SparkSession, base: String, http: HttpServer,
               reqField(req, "distribution").asText() == "gaussian")
             graft.core.RandomData.generateGaussian(spark, n, dims, seed)
           else graft.core.RandomData.generate(spark, n, dims, seed)
-        withEntityLock(reqField(req, "name").asText()) { entity(req).insert(df) }
+        entity(req).insert(df)
         out.put("inserted", n)
       case "/import" =>
         // reference web `POST /import`: file import through the Spark
@@ -1386,11 +1318,7 @@ class Server private(spark: SparkSession, base: String, http: HttpServer,
         val name = reqField(req, "name").asText()
         val df = graft.core.ImportExport.importTable(spark,
           reqField(req, "format").asText(), reqField(req, "path").asText())
-        withEntityLock(name) {
-          val e = if (Entity.exists(base, name)) Entity.open(spark, base, name)
-                  else Entity.create(spark, base, name)
-          e.insert(df)
-        }
+        Entity.openOrCreate(spark, base, name).insert(df)
         out.put("imported", name)
       case "/export" =>
         // export the entity's logical rows (system id dropped) to a file
@@ -1407,7 +1335,7 @@ class Server private(spark: SparkSession, base: String, http: HttpServer,
         // are (id, distance) rows: exact sets carry distance 0 like the
         // reference's UnionExpression family, fuzzy forms merge scores.
         val idCol = reqField(req, "idCol").asText()
-        pagedRows(out, compoundFrame(reqField(req, "tree"), idCol)
+        pagedRows(out, SetAlgebra.scored(compoundFrame(reqField(req, "tree"), idCol), idCol)
           .orderBy(col("distance"), col(idCol)))
       case "/search/hybrid" =>
         // BM25 + vector cosine fused by reciprocal rank (k0 = 60)
@@ -1454,7 +1382,7 @@ object Server {
     val http = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     val server = new Server(spark, base, http, maxResults)
     http.createContext("/", (ex: HttpExchange) => server.handle(ex))
-    http.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+    http.setExecutor(server.pool)
     http.start()
     server
   }

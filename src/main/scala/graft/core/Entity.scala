@@ -41,6 +41,13 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
   private def meta: Meta = readMeta(metaPath)
   private def dataPath(v: Int): Path = dir.resolve(s"data_v$v")
 
+  /** Run `f` holding this entity's mutation lock. Every mutating method
+    * takes it, so mutations from any caller (either front door, the
+    * streaming path, library code) serialize per entity: each is a
+    * read-modify-write of `_meta.json`. Reads stay lock-free — a reader
+    * mid-swap sees the old version. Reentrant (an insert may vacuum). */
+  private[graft] def exclusively[T](f: => T): T = lockOf(dir).synchronized(f)
+
   def schema: StructType = read().schema
 
   /** Attributes stored outside the primary parquet store, per handler —
@@ -90,7 +97,7 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
     *    key-skip via [[readPrunedKeys]];
     *  - `Hash`/`Random`: plain repartitioned rewrite, no directory
     *    layout (clears any previous one). */
-  def partitionLayout(mode: Partitioning.Mode): Entity = {
+  def partitionLayout(mode: Partitioning.Mode): Entity = exclusively {
     val m = meta
     require(m.version > 0, "empty entity")
     val df = read().drop(Partitioning.PartitionCol)
@@ -229,7 +236,7 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
     * repeated inserts (`Entity.scala:376-386`, default 100). The
     * part-file count is a directory listing, metadata-only. */
   def insert(df: DataFrame,
-             autoVacuumMaxParts: Int = Entity.AutoVacuumMaxParts): Entity = {
+             autoVacuumMaxParts: Int = Entity.AutoVacuumMaxParts): Entity = exclusively {
     val m = meta
     require(m.insertCount < (1 << 15) - 1, "insert-batch counter exhausted")
     val batch = m.insertCount + 1
@@ -302,28 +309,29 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
 
   /** Delete rows matching the predicate — filter-NOT-and-overwrite
     * (reference `Entity.scala:415-450`). Returns deleted-row count. */
-  def deleteWhere(predicate: Column): Long = {
+  def deleteWhere(predicate: Column): Long = exclusively {
     val m = meta
-    if (m.version == 0) return 0L
-    val current = read()
-    val keep = current.filter(!coalesce(predicate, lit(false)))
-    val next = m.version + 1
-    writeData(keep, dataPath(next))
-    // deleted = rows(v) − rows(v+1). With no external attribute groups
-    // both versions are plain parquet stores, so the counts come off the
-    // parquet FOOTERS, read driver-side — zero Spark jobs where the old
-    // path launched two count() actions (identical values: a parquet
-    // count() is the same footer row-count sum, run as a job). Group
-    // entities keep the general count()s — read() is a reassembly join
-    // there, not a footer sum.
-    val deleted =
-      if (attributeGroups.isEmpty)
-        parquetRowCount(dataPath(m.version)) - parquetRowCount(dataPath(next))
-      else current.count() -
-        spark.read.parquet(dataPath(next).toString).count()
-    swap(m.copy(version = next))
-    foldGroupsAfterRewrite()
-    deleted
+    if (m.version == 0) 0L else {
+      val current = read()
+      val keep = current.filter(!coalesce(predicate, lit(false)))
+      val next = m.version + 1
+      writeData(keep, dataPath(next))
+      // deleted = rows(v) − rows(v+1). With no external attribute groups
+      // both versions are plain parquet stores, so the counts come off the
+      // parquet FOOTERS, read driver-side — zero Spark jobs where the old
+      // path launched two count() actions (identical values: a parquet
+      // count() is the same footer row-count sum, run as a job). Group
+      // entities keep the general count()s — read() is a reassembly join
+      // there, not a footer sum.
+      val deleted =
+        if (attributeGroups.isEmpty)
+          parquetRowCount(dataPath(m.version)) - parquetRowCount(dataPath(next))
+        else current.count() -
+          spark.read.parquet(dataPath(next).toString).count()
+      swap(m.copy(version = next))
+      foldGroupsAfterRewrite()
+      deleted
+    }
   }
 
   /** Total row count of a parquet store from its file footers — a
@@ -367,55 +375,57 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
     * so the table never shuffles; the rewrite is the same O(table)
     * write-new-then-swap every mutation on a versioned store pays, and
     * layout entities keep their directory layout through it. */
-  def upsert(df: DataFrame, keyCol: String): Entity = {
+  def upsert(df: DataFrame, keyCol: String): Entity = exclusively {
     val m = meta
-    if (m.version == 0) return insert(df)
-    require(m.insertCount < (1 << 15) - 1, "insert-batch counter exhausted")
-    val current = read()
-    require(current.columns.contains(keyCol), s"no such attribute: $keyCol")
-    require(df.columns.contains(keyCol), s"incoming batch lacks '$keyCol'")
-    require(df.groupBy(col(keyCol))
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("c"))
-      .filter(col("c") > 1).isEmpty,
-      s"incoming batch has duplicate '$keyCol' keys — ambiguous replacement refused")
-    val batch = m.insertCount + 1
-    val withId = assignPartition(df.withColumn(ApId,
-      lit(batch.toLong << 48).bitwiseOR(
-        monotonically_increasing_id().bitwiseAND(lit((1L << 48) - 1)))))
-    def schemaKey(x: DataFrame): Set[(String, String)] =
-      x.schema.fields.map(f => f.name -> f.dataType.sql).toSet
-    require(schemaKey(current) == schemaKey(withId),
-      "upsert requires the incoming schema to match the entity")
-    val kept = current.join(df.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
-    val merged = kept.select(current.columns.map(col): _*)
-      .unionByName(withId.select(current.columns.map(col): _*))
-    val next = m.version + 1
-    writeData(merged, dataPath(next))
-    swap(m.copy(version = next, insertCount = batch))
-    foldGroupsAfterRewrite()
-    this
+    if (m.version == 0) insert(df) else {
+      require(m.insertCount < (1 << 15) - 1, "insert-batch counter exhausted")
+      val current = read()
+      require(current.columns.contains(keyCol), s"no such attribute: $keyCol")
+      require(df.columns.contains(keyCol), s"incoming batch lacks '$keyCol'")
+      require(df.groupBy(col(keyCol))
+        .agg(org.apache.spark.sql.functions.count(lit(1)).as("c"))
+        .filter(col("c") > 1).isEmpty,
+        s"incoming batch has duplicate '$keyCol' keys — ambiguous replacement refused")
+      val batch = m.insertCount + 1
+      val withId = assignPartition(df.withColumn(ApId,
+        lit(batch.toLong << 48).bitwiseOR(
+          monotonically_increasing_id().bitwiseAND(lit((1L << 48) - 1)))))
+      def schemaKey(x: DataFrame): Set[(String, String)] =
+        x.schema.fields.map(f => f.name -> f.dataType.sql).toSet
+      require(schemaKey(current) == schemaKey(withId),
+        "upsert requires the incoming schema to match the entity")
+      val kept = current.join(df.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
+      val merged = kept.select(current.columns.map(col): _*)
+        .unionByName(withId.select(current.columns.map(col): _*))
+      val next = m.version + 1
+      writeData(merged, dataPath(next))
+      swap(m.copy(version = next, insertCount = batch))
+      foldGroupsAfterRewrite()
+      this
+    }
   }
 
   /** Rewrite + repartition (reference vacuum, `Entity.scala:376-386`).
     * Layout entities compact within their partition directories (one
     * shuffle partition per layout key) instead of a flat repartition. */
-  def vacuum(numPartitions: Int = 8): Entity = {
+  def vacuum(numPartitions: Int = 8): Entity = exclusively {
     val m = meta
-    if (m.version == 0) return this
-    val next = m.version + 1
-    val df =
-      if (layout.isDefined) read().repartition(col(Partitioning.PartitionCol))
-      else read().repartition(numPartitions)
-    writeData(df, dataPath(next))
-    swap(m.copy(version = next))
-    foldGroupsAfterRewrite()
+    if (m.version > 0) {
+      val next = m.version + 1
+      val df =
+        if (layout.isDefined) read().repartition(col(Partitioning.PartitionCol))
+        else read().repartition(numPartitions)
+      writeData(df, dataPath(next))
+      swap(m.copy(version = next))
+      foldGroupsAfterRewrite()
+    }
     this
   }
 
   /** Dense vector attribute → sparse struct (indices, values, length) —
     * reference sparsify (`EntityOp.scala:101-117`). Zero elements are
     * dropped. */
-  def sparsify(vecCol: String): Entity = {
+  def sparsify(vecCol: String): Entity = exclusively {
     val m = meta
     require(m.version > 0, "empty entity")
     val df = read()
@@ -448,7 +458,7 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
     * Handlers are restricted to the type-round-trip-safe set (parquet /
     * orc / keyvalue): json and csv widen float→double on read, which
     * would silently drift the entity schema. */
-  def transferAttributes(attrs: Seq[String], handlerName: String): Entity = {
+  def transferAttributes(attrs: Seq[String], handlerName: String): Entity = exclusively {
     val m = meta
     require(m.version > 0, "empty entity")
     require(attrs.nonEmpty && attrs.distinct.size == attrs.size,
@@ -509,7 +519,7 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
     }.getOrElse(
       throw new IllegalStateException(s"$name has no keyvalue/compound group"))
 
-  def drop(): Unit = deleteRecursively(dir)
+  def drop(): Unit = exclusively(deleteRecursively(dir))
 
   // ---- index persistence (reference `Index.scala:442-471`, `:162-169`) ----
 
@@ -524,10 +534,14 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
     (m.version, if (m.pending) -m.insertCount else m.insertCount)
   }
 
-  /** Persist an index built over this entity; records the current stamp. */
+  /** Persist an index built over this entity. `builtAt` is the stamp the
+    * build's scan saw — take it BEFORE `read()`, so rows that land during
+    * the build leave the index stale instead of falsely fresh; it
+    * defaults to the stamp at save time. */
   def saveIndex(name: String, idx: graft.index.VectorIndex,
-                buildInfo: Map[String, String] = Map.empty): Entity = {
-    graft.index.IndexStore.save(dir.toString, name, idx, stamp, buildInfo)
+                buildInfo: Map[String, String] = Map.empty,
+                builtAt: (Int, Int) = stamp): Entity = exclusively {
+    graft.index.IndexStore.save(dir.toString, name, idx, builtAt, buildInfo)
     this
   }
 
@@ -548,7 +562,13 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
 
   def listIndexes: Seq[String] = graft.index.IndexStore.list(dir.toString)
 
-  def dropIndex(name: String): Unit = graft.index.IndexStore.drop(dir.toString, name)
+  /** Every stored index that is fresh against the current stamp — the
+    * candidate set the planner and the plan race choose from. */
+  def freshIndexes: Seq[graft.index.VectorIndex] =
+    listIndexes.map(loadIndex).filterNot(_.stale).map(_.index)
+
+  def dropIndex(name: String): Unit =
+    exclusively(graft.index.IndexStore.drop(dir.toString, name))
 
   /** The index's narrow on-disk table (cache pinning, diagnostics). */
   def indexData(name: String): DataFrame =
@@ -556,7 +576,9 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
 
   /** Repartition a persisted index's table (reference
     * `repartitionIndexData`); structure metadata and stamp survive. */
-  def repartitionIndex(name: String, mode: Partitioning.Mode): Entity = {
+  def repartitionIndex(name: String, mode: Partitioning.Mode): Entity = exclusively {
+    require(mode.isInstanceOf[Partitioning.Hash] || mode.isInstanceOf[Partitioning.Random],
+      s"index repartition supports hash|random, got: $mode")
     graft.index.IndexStore.repartitionData(spark, dir.toString, name, mode)
     this
   }
@@ -599,7 +621,7 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
     * corpus a run read while mutations continue). Snapshot boundaries
     * are MUTATION swaps: inserts append into the live version, so the
     * live snapshot is frozen only once the next mutation lands. */
-  def retainVersions(k: Int): Entity = {
+  def retainVersions(k: Int): Entity = exclusively {
     require(k >= 1, "must retain at least the live version")
     writeMeta(metaPath, meta.copy(retain = k))
     this
@@ -692,6 +714,10 @@ object Entity {
 
   private val jackson = new com.fasterxml.jackson.databind.ObjectMapper()
 
+  private val mutationLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  private def lockOf(dir: Path): Object =
+    mutationLocks.computeIfAbsent(dir.toAbsolutePath.normalize.toString, _ => new Object)
+
   private def writeLayout(p: Path, l: Layout): Unit = {
     val root = jackson.createObjectNode()
     root.put("mode", l.mode)
@@ -759,11 +785,19 @@ object Entity {
   def create(spark: SparkSession, base: String, name: String): Entity = {
     require(name.nonEmpty && name.matches("[A-Za-z0-9_]+"), s"invalid entity name: $name")
     val dir = Paths.get(base).resolve(name)
-    require(!Files.exists(dir), s"entity $name already exists")
-    Files.createDirectories(dir)
-    writeMeta(dir.resolve("_meta.json"), Meta(name, 0, 0))
+    lockOf(dir).synchronized {
+      require(!Files.exists(dir), s"entity $name already exists")
+      Files.createDirectories(dir)
+      writeMeta(dir.resolve("_meta.json"), Meta(name, 0, 0))
+    }
     new Entity(name, Paths.get(base), spark)
   }
+
+  /** Open the entity, creating it first when absent (atomically). */
+  def openOrCreate(spark: SparkSession, base: String, name: String): Entity =
+    lockOf(Paths.get(base).resolve(name)).synchronized {
+      if (exists(base, name)) open(spark, base, name) else create(spark, base, name)
+    }
 
   def open(spark: SparkSession, base: String, name: String): Entity = {
     val dir = Paths.get(base).resolve(name)

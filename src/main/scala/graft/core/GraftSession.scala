@@ -23,8 +23,4 @@ object GraftSession {
       // GC'd, the lifecycle cached blocks already follow
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.ui.enabled", "false")
-      // bucketed catalog tables (co-located joins) land in a temp
-      // warehouse, not the process working directory
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
 }

@@ -47,6 +47,25 @@ object Partitioning {
     require(cell > 0, "tile cell must be positive")
   }
 
+  /** Partitioner name → [[Mode]]: the one table both front doors decode
+    * into. `cols` are the mode's columns in order — hash: the keys; ecp:
+    * the vector column; column (alias bycolumn): the key column; zorder:
+    * two columns; tile: x, y and the cell size. `n` below 1 reads as 1. */
+  def parseMode(name: String, cols: Seq[String], n: Int): Mode = {
+    val parts = math.max(n, 1)
+    def need(k: Int, what: String): Unit =
+      require(cols.size >= k, s"${if (name.isEmpty) "hash" else name} partitioner needs $what")
+    name.toLowerCase match {
+      case "" | "hash" => need(1, "attributes"); Hash(cols, parts)
+      case "random" => Random(parts)
+      case "ecp" => need(1, "the vector attribute"); Ecp(cols.head, parts)
+      case "column" | "bycolumn" => need(1, "the key attribute"); ByColumn(cols.head)
+      case "zorder" => need(2, "two attributes"); ZOrder(cols(0), cols(1), parts)
+      case "tile" => need(3, "[x, y, cell]"); Tile(cols(0), cols(1), cols(2).toDouble)
+      case other => throw new IllegalArgumentException(s"unknown partitioner: $other")
+    }
+  }
+
   /** Packed tile key: (gx, gy) grid indexes into one long. 2^17 rows
     * per x-stripe keeps keys unique for |gy| < 65536 — beyond any
     * realistic cell/extent ratio. */

@@ -5,6 +5,7 @@ import java.io.{ByteArrayInputStream, InputStream}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.sparkproject.connect.grpc.{MethodDescriptor, Server, ServerCallHandler, ServerServiceDefinition}
 import org.sparkproject.connect.grpc.inprocess.InProcessServerBuilder
@@ -13,8 +14,8 @@ import org.sparkproject.connect.grpc.stub.{ServerCalls, StreamObserver}
 import org.sparkproject.connect.protobuf.{Descriptors, DynamicMessage}
 
 import graft.api.{IndexOps, NnQuery, QueryOps}
-import graft.core.Entity
-import graft.operators.{Knn, Projections}
+import graft.core.{Entity, Partitioning}
+import graft.operators.{BooleanPredicates, Knn, Projections, SetAlgebra}
 
 /** gRPC front door — the reference's primary wire protocol
   * (`S/communication/rpc/DataDefintion.scala:40-230`, `DataQuery.scala:
@@ -30,6 +31,12 @@ import graft.operators.{Knn, Projections}
   * payload-level `AckMessage(ERROR, …)`, matching the reference, not as
   * gRPC status codes. Results `collect()` at most k / preview-n rows —
   * bounded by construction.
+  *
+  * This class only decodes messages into the core the HTTP front door
+  * shares ([[QueryOps.route]], [[SetAlgebra.combine]],
+  * [[Partitioning.parseMode]], [[IndexOps.createAll]], `Entity`'s own
+  * mutation lock) and encodes the results; the one policy of its own is
+  * that a stale named index is refused, not served.
   */
 class GraftGrpcServer(spark: SparkSession, base: String) {
   import Proto._
@@ -102,6 +109,23 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
   private def sub(m: DynamicMessage, name: String): DynamicMessage =
     m.getField(m.getDescriptorForType.findFieldByName(name))
       .asInstanceOf[DynamicMessage]
+
+  private def strs(m: DynamicMessage, name: String): Seq[String] =
+    m.getField(m.getDescriptorForType.findFieldByName(name))
+      .asInstanceOf[java.util.List[_]].asScala.map(_.toString).toSeq
+
+  /** Repeated WhereMessage field → conjunctive predicates (reference
+    * prepareBQ, `MessageParser.scala:348-381`); an empty op reads `=`. */
+  private def wherePredicates(m: DynamicMessage, name: String): Seq[BooleanPredicates.Predicate] =
+    m.getField(m.getDescriptorForType.findFieldByName(name))
+      .asInstanceOf[java.util.List[_]].asScala.toSeq.map { w =>
+        val wm = w.asInstanceOf[DynamicMessage]
+        val values = wm.getField(msg("WhereMessage").findFieldByName("values"))
+          .asInstanceOf[java.util.List[_]].asScala.toSeq
+          .map(v => valueOf(v.asInstanceOf[DynamicMessage]))
+        BooleanPredicates.Predicate(str(wm, "attribute"),
+          { val op = str(wm, "op"); if (op.isEmpty) "=" else op }, values)
+      }
 
   private def ackOf(ok: Boolean, text: String = ""): DynamicMessage = ack(ok, text)
 
@@ -270,15 +294,10 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
             om.getField(entryD.findFieldByName("key")).asInstanceOf[String] ->
               om.getField(entryD.findFieldByName("value")).asInstanceOf[String]
           }.toMap
-        val e = Entity.open(spark, base, name)
-        val idx = graft.api.IndexOps.create(indextype, e.read(), "ap_id", attribute,
-          options)
-        val indexname = s"${indextype}_$attribute"
-        // record the build recipe so RefreshIndex can rebuild a stale
+        // the recorded build recipe lets RefreshIndex rebuild a stale
         // index with the ORIGINAL tuning
-        e.saveIndex(indexname, idx, Map(
-          graft.api.IndexOps.InfoType -> indextype,
-          graft.api.IndexOps.InfoAttribute -> attribute) ++ options)
+        val indexname = IndexOps.createAll(Entity.open(spark, base, name), attribute,
+          Seq(indextype), options = options).head
         ackOf(ok = true, indexname) // reference echoes the index name
       } catch { case e: Exception => ackOf(ok = false, e.getMessage) }
     }
@@ -333,11 +352,7 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
           "type" -> ProtoImportExport.typeNameOf(f.dataType),
           "handler" -> group.map(_.handler).getOrElse("parquet"),
           "store" -> group.map(_.store).getOrElse(""),
-          // exact `<type>_<attribute>` matches only — a bare suffix test
-          // would report doc_id's indexes for an attribute named `id`
-          "indexes" -> e.listIndexes.filter(n =>
-              IndexOps.knownTypes.exists(tp => n == s"${tp}_$attribute"))
-            .sorted.mkString(",")) ++ handlerParams)
+          "indexes" -> IndexOps.over(e, attribute).mkString(",")) ++ handlerParams)
       } catch { case e: Exception => propertiesMsg(ok = false, e.getMessage, Nil) }
     }
 
@@ -394,28 +409,17 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
 
     u("ListStorageHandlers", "EmptyMessage", "StorageHandlersMessage") { _ =>
       val out = withAck("StorageHandlersMessage", ok = true)
-      (graft.sources.StorageHandlers.all.keys.toSeq ++ Seq("keyvalue", "compound")).sorted
-        .foreach(h => out.addRepeatedField(
-          msg("StorageHandlersMessage").findFieldByName("handlers"), h))
+      graft.sources.StorageHandlers.names.foreach(h => out.addRepeatedField(
+        msg("StorageHandlersMessage").findFieldByName("handlers"), h))
       out.build()
     }
 
     u("GenerateAllIndexes", "IndexMessage", "IndexesMessage") { req =>
       try {
-        val name = str(req, "entity")
-        val attribute = str(req, "attribute")
-        val e = Entity.open(spark, base, name)
-        val df = e.read()
         // the full family — reference 8 + ivfpq/sq, so the wire surface
         // exposes every structure the planner can route to
-        val types = graft.api.IndexOps.knownTypes
-        val names = types.map { tp =>
-          val idxName = s"${tp}_$attribute"
-          e.saveIndex(idxName, graft.api.IndexOps.create(tp, df, "ap_id", attribute),
-            Map(graft.api.IndexOps.InfoType -> tp,
-              graft.api.IndexOps.InfoAttribute -> attribute))
-          idxName
-        }
+        val names = IndexOps.createAll(
+          Entity.open(spark, base, str(req, "entity")), str(req, "attribute"))
         val out = withAck("IndexesMessage", ok = true)
         names.foreach(n =>
           out.addRepeatedField(msg("IndexesMessage").findFieldByName("indexes"), n))
@@ -507,51 +511,20 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
 
     u("Delete", "DeleteMessage", "AckMessage") { req =>
       try {
-        val preds = req.getField(
-          req.getDescriptorForType.findFieldByName("predicates"))
-          .asInstanceOf[java.util.List[_]].asScala.toSeq.map { w =>
-            val wm = w.asInstanceOf[DynamicMessage]
-            val values = wm.getField(msg("WhereMessage").findFieldByName("values"))
-              .asInstanceOf[java.util.List[_]].asScala.toSeq
-              .map(v => valueOf(v.asInstanceOf[DynamicMessage]))
-            graft.operators.BooleanPredicates.Predicate(
-              str(wm, "attribute"),
-              { val op = str(wm, "op"); if (op.isEmpty) "=" else op },
-              values)
-          }
+        val preds = wherePredicates(req, "predicates")
         require(preds.nonEmpty, "delete needs at least one predicate")
         val deleted = Entity.open(spark, base, str(req, "entity"))
-          .deleteWhere(graft.operators.BooleanPredicates.conjunction(preds))
+          .deleteWhere(BooleanPredicates.conjunction(preds))
         ackOf(ok = true, deleted.toString) // reference echoes the count
       } catch { case e: Exception => ackOf(ok = false, e.getMessage) }
     }
 
     u("RepartitionEntityData", "RepartitionMessage", "AckMessage") { req =>
       try {
-        val d = req.getDescriptorForType
-        val n = req.getField(d.findFieldByName("numberOfPartitions")).asInstanceOf[Int]
-        val attrs = req.getField(d.findFieldByName("attributes"))
-          .asInstanceOf[java.util.List[_]].asScala.map(_.toString).toSeq
-        val mode = str(req, "partitioner").toLowerCase match {
-          case "" | "hash" =>
-            require(attrs.nonEmpty, "hash partitioner needs attributes")
-            graft.core.Partitioning.Hash(attrs, math.max(n, 1))
-          case "random" => graft.core.Partitioning.Random(math.max(n, 1))
-          case "ecp" =>
-            require(attrs.nonEmpty, "ecp partitioner needs the vector attribute")
-            graft.core.Partitioning.Ecp(attrs.head, math.max(n, 1))
-          case "bycolumn" =>
-            require(attrs.nonEmpty, "bycolumn partitioner needs the key attribute")
-            graft.core.Partitioning.ByColumn(attrs.head)
-          case "zorder" =>
-            require(attrs.size >= 2, "zorder partitioner needs two attributes")
-            graft.core.Partitioning.ZOrder(attrs(0), attrs(1), math.max(n, 1))
-          case "tile" =>
-            // attributes = [xCol, yCol, cellSize]
-            require(attrs.size >= 3, "tile partitioner needs [x, y, cell]")
-            graft.core.Partitioning.Tile(attrs(0), attrs(1), attrs(2).toDouble)
-          case other => throw new IllegalArgumentException(s"unknown partitioner: $other")
-        }
+        // attributes carry the mode's columns (tile: [x, y, cellSize])
+        val mode = Partitioning.parseMode(str(req, "partitioner"), strs(req, "attributes"),
+          req.getField(req.getDescriptorForType.findFieldByName("numberOfPartitions"))
+            .asInstanceOf[Int])
         Entity.open(spark, base, str(req, "entity")).partitionLayout(mode)
         ackOf(ok = true)
       } catch { case e: Exception => ackOf(ok = false, e.getMessage) }
@@ -564,19 +537,10 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
     // vector column to cluster by
     u("RepartitionIndexData", "RepartitionMessage", "AckMessage") { req =>
       try {
-        val d = req.getDescriptorForType
-        val n = math.max(
-          req.getField(d.findFieldByName("numberOfPartitions")).asInstanceOf[Int], 1)
-        val attrs = req.getField(d.findFieldByName("attributes"))
-          .asInstanceOf[java.util.List[_]].asScala.map(_.toString).toSeq
-        val mode = str(req, "partitioner").toLowerCase match {
-          case "" | "hash" =>
-            graft.core.Partitioning.Hash(
-              if (attrs.nonEmpty) attrs else Seq(Entity.ApId), n)
-          case "random" => graft.core.Partitioning.Random(n)
-          case other => throw new IllegalArgumentException(
-            s"index repartition supports hash|random, got: $other")
-        }
+        val mode = Partitioning.parseMode(str(req, "partitioner"),
+          Some(strs(req, "attributes")).filter(_.nonEmpty).getOrElse(Seq(Entity.ApId)),
+          req.getField(req.getDescriptorForType.findFieldByName("numberOfPartitions"))
+            .asInstanceOf[Int])
         val index = str(req, "index")
         Entity.open(spark, base, str(req, "entity")).repartitionIndex(index, mode)
         ackOf(ok = true, index)
@@ -588,11 +552,8 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
     // storage/Transferer.scala)
     u("TransferStorageHandler", "TransferStorageHandlerMessage", "AckMessage") { req =>
       try {
-        val attrs = req.getField(
-          req.getDescriptorForType.findFieldByName("attributes"))
-          .asInstanceOf[java.util.List[_]].asScala.map(_.toString).toSeq
         Entity.open(spark, base, str(req, "entity"))
-          .transferAttributes(attrs, str(req, "handler"))
+          .transferAttributes(strs(req, "attributes"), str(req, "handler"))
         ackOf(ok = true)
       } catch { case e: Exception => ackOf(ok = false, e.getMessage) }
     }
@@ -751,18 +712,14 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
             val nnq = parseNnq(sub(req, "nnq"))
             val hints =
               if (!useHints) Nil
-              else graft.plans.Planner.hintsByName(
-                req.getField(qd.findFieldByName("hints"))
-                  .asInstanceOf[java.util.List[_]].asScala.map(_.toString).toSeq)
-            val indexes = entity.listIndexes.map(entity.loadIndex)
-              .filterNot(_.stale).map(_.index)
+              else graft.plans.Planner.hintsByName(strs(req, "hints"))
             // partition restriction applies to the rerank frame, so every
             // racing plan's FINAL rows honor it (index candidates from
             // other partitions drop in the rerank semi-join)
             val specs = graft.api.QueryOps.planSpecsFor(
               restrictPartitions(entity, entity.read(),
                 nnqPartitions(sub(req, "nnq"))),
-              Entity.ApId, indexes, nnq, hints)
+              Entity.ApId, entity.freshIndexes, nnq, hints)
             val prefix = if (queryid.isEmpty) "graft-" else s"graft-$queryid-"
             if (queryid.nonEmpty) running.put(queryid, () =>
               specs.foreach(p =>
@@ -917,14 +874,12 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
     * entities with a persisted partition layout — the ids then name real
     * `ap_partition` directories and the isin filter is Catalyst
     * partition pruning, not a row filter. */
-  private def restrictPartitions(e: Entity, df: org.apache.spark.sql.DataFrame,
-                                 parts: Seq[Int]): org.apache.spark.sql.DataFrame =
+  private def restrictPartitions(e: Entity, df: DataFrame, parts: Seq[Int]): DataFrame =
     if (parts.isEmpty) df
     else {
       require(e.layout.isDefined,
         "partition restriction needs a partitioned entity layout")
-      df.filter(org.apache.spark.sql.functions
-        .col(graft.core.Partitioning.PartitionCol).isin(parts: _*))
+      df.filter(col(Partitioning.PartitionCol).isin(parts: _*))
     }
 
   private def ackIsOk(m: DynamicMessage): Boolean = {
@@ -972,13 +927,9 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
           val entity = Entity.open(spark, base, str(fromMsg, "entity"))
           val df = restrictPartitions(entity, entity.read(),
             nnqPartitions(sub(req, "nnq")))
-          val hints = req.getField(qd.findFieldByName("hints"))
-            .asInstanceOf[java.util.List[_]].asScala.map(_.toString).toSeq
-          val indexes = entity.listIndexes.map(entity.loadIndex)
-            .filterNot(_.stale).map(_.index)
-          val o = QueryOps.timedParallel(spark, df, Entity.ApId, indexes,
+          val o = QueryOps.timedParallel(spark, df, Entity.ApId, entity.freshIndexes,
             parseNnq(sub(req, "nnq")), timeLimitMs,
-            graft.plans.Planner.hintsByName(hints))
+            graft.plans.Planner.hintsByName(strs(req, "hints")))
           return (o.result match {
             case scala.util.Success(rows) =>
               rowsMessage(rows.toSeq,
@@ -996,18 +947,14 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
           if (!req.hasField(qd.findFieldByName("projection"))) res
           else {
             val pm = sub(req, "projection")
-            val attrs = pm.getField(
-              msg("ProjectionMessage").findFieldByName("attribute"))
-              .asInstanceOf[java.util.List[_]].asScala.map(_.toString).toSeq
-            import graft.operators.{Knn, Projections}
+            val attrs = strs(pm, "attribute")
             // row-returning forms share the boolean-scan page cap (the
             // response collects); count/exists aggregate to one row.
             // ORDER before the cap — a bare .limit over >500 rows
             // returns a partitioning-dependent subset (same defect the
-            // compound-expression path fixed below): by distance then
+            // compound-expression path fixed): by distance then
             // ap_id when present, else by every projected column
-            def orderedCap(df: org.apache.spark.sql.DataFrame) = {
-              import org.apache.spark.sql.functions.col
+            def orderedCap(df: DataFrame) = {
               val cols = df.columns.toSeq
               val sortKeys =
                 if (cols.contains(Knn.DistanceCol))
@@ -1033,115 +980,44 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
     * engine behind [[runQueryBody]] and compound FROM expressions
     * (reference `MessageParser.toExpression`: a FROM may be an entity or
     * a set-algebra expression over two subqueries). */
-  private def queryFrame(req: DynamicMessage): (org.apache.spark.sql.DataFrame, String) = {
-        val qd = req.getDescriptorForType
-        val fromMsg = sub(req, "from")
-        val fd = fromMsg.getDescriptorForType
+  private def queryFrame(req: DynamicMessage): (DataFrame, String) = {
+    val qd = req.getDescriptorForType
+    val fromMsg = sub(req, "from")
 
-        if (fromMsg.hasField(fd.findFieldByName("expression"))) {
-          // compound query: evaluate both subqueries, combine on ap_id
-          // (reference UnionExpression / IntersectExpression / ... —
-          // results are id sets with distance 0, fuzzy forms merge the
-          // sides' distances)
-          import graft.operators.SetAlgebra
-          val em = sub(fromMsg, "expression")
-          val (l, _) = queryFrame(sub(em, "left"))
-          val (r, _) = queryFrame(sub(em, "right"))
-          import org.apache.spark.sql.functions.{col, lit}
-          val dc = Knn.DistanceCol
-          def withDist(df: org.apache.spark.sql.DataFrame) =
-            if (df.columns.contains(dc))
-              df.select(col(Entity.ApId), col(dc).as("distance"))
-            else df.select(col(Entity.ApId)).withColumn("distance", lit(0.0))
-          val op = str(em, "operation").toLowerCase
-          val out = op match {
-            case "" | "union" => SetAlgebra.union(l, r, Entity.ApId)
-            case "intersect" | "join" => SetAlgebra.intersect(l, r, Entity.ApId)
-            case "except" => SetAlgebra.except(l, r, Entity.ApId)
-            case "fuzzyunion" =>
-              SetAlgebra.fuzzyUnion(withDist(l), withDist(r), Entity.ApId)
-            case "fuzzyintersect" =>
-              SetAlgebra.fuzzyIntersect(withDist(l), withDist(r), Entity.ApId)
-            case other => throw new IllegalArgumentException(
-              s"unknown expression operation: $other")
-          }
-          // order BEFORE the page cap: an unordered limit over a merged
-          // set > 500 ids returns a partitioning-dependent subset
-          val capped = out.columns.toSeq match {
-            case cols if cols.contains("distance") =>
-              out.orderBy(col("distance"), col(Entity.ApId)).limit(500)
-            case _ => out.orderBy(col(Entity.ApId)).limit(500)
-          }
-          return (capped, s"$op expression")
-        }
+    if (fromMsg.hasField(fromMsg.getDescriptorForType.findFieldByName("expression"))) {
+      // compound query: combine both subqueries' (ap_id, distance) sets
+      // (reference UnionExpression / IntersectExpression / ...)
+      val em = sub(fromMsg, "expression")
+      val op = str(em, "operation").toLowerCase
+      val out = SetAlgebra.combine(op, queryFrame(sub(em, "left"))._1,
+        queryFrame(sub(em, "right"))._1, Entity.ApId)
+      // order BEFORE the page cap: an unordered limit over a merged
+      // set > 500 ids returns a partitioning-dependent subset
+      return (out.orderBy(col("distance"), col(Entity.ApId)).limit(500), s"$op expression")
+    }
 
-        val entityName = str(fromMsg, "entity")
-        val entity = Entity.open(spark, base, entityName)
-        // partition-restricted scan (reference RankingQuery.partitions)
-        val df =
-          if (!req.hasField(qd.findFieldByName("nnq"))) entity.read()
-          else restrictPartitions(entity, entity.read(),
-            nnqPartitions(sub(req, "nnq")))
-
-        // optional boolean query (reference prepareBQ,
-        // MessageParser.scala:348-381): conjunction of Where predicates
-        val preds: Seq[graft.operators.BooleanPredicates.Predicate] =
-          if (!req.hasField(qd.findFieldByName("bq"))) Nil
-          else sub(req, "bq").getField(
-            msg("BooleanQueryMessage").findFieldByName("where"))
-            .asInstanceOf[java.util.List[_]].asScala.toSeq.map { w =>
-              val wm = w.asInstanceOf[DynamicMessage]
-              val values = wm.getField(
-                msg("WhereMessage").findFieldByName("values"))
-                .asInstanceOf[java.util.List[_]].asScala.toSeq
-                .map(v => valueOf(v.asInstanceOf[DynamicMessage]))
-              graft.operators.BooleanPredicates.Predicate(
-                str(wm, "attribute"),
-                { val op = str(wm, "op"); if (op.isEmpty) "=" else op },
-                values)
-            }
-
-        // optional nearest-neighbour query
-        val nnqOpt: Option[NnQuery] =
-          if (!req.hasField(qd.findFieldByName("nnq"))) None
-          else Some(parseNnq(sub(req, "nnq")))
-
-        // hints, in precedence order (reference HintBasedScanExpression):
-        // a hint naming a SAVED INDEX routes the scan through it directly;
-        // otherwise hints parse as PLANNER hints ("vaf", "ecp",
-        // "sequential", ...) and the hint walk picks the plan over the
-        // entity's fresh stored indexes — same semantics as the HTTP path
-        val hints = req.getField(qd.findFieldByName("hints"))
-          .asInstanceOf[java.util.List[_]].asScala.map(_.toString).toSeq
-        val indexHint = hints.find(entity.listIndexes.contains)
-        val plannerHints = graft.plans.Planner.hintsByName(hints)
-
-        (nnqOpt, preds) match {
-          case (Some(nnq), Nil) if indexHint.isDefined =>
-            val loaded = entity.loadIndex(indexHint.get)
-            require(!loaded.stale, s"index ${indexHint.get} is stale")
-            (QueryOps.index(df, "ap_id", loaded.index, nnq),
-              s"index scan (${indexHint.get})")
-          case (Some(nnq), Nil) if plannerHints.nonEmpty =>
-            val indexes =
-              if (plannerHints.forall(_ == graft.plans.Planner.SequentialHint)) Nil
-              else entity.listIndexes.map(entity.loadIndex)
-                .filterNot(_.stale).map(_.index)
-            val plan = QueryOps.choosePlan(df, indexes, plannerHints, nnq)
-            (QueryOps.runPlan(plan, df, "ap_id", nnq), plan.describe)
-          case (Some(nnq), Nil) => (QueryOps.sequential(df, "ap_id", nnq),
-            "sequential scan")
-          case (Some(nnq), ps) => (QueryOps.filteredKnn(df, "ap_id", ps, nnq),
-            "boolean filter + sequential scan")
-          case (None, ps) if ps.nonEmpty =>
-            // page cap mirrors the HTTP front door (Server.scala): a bare
-            // boolean scan is unbounded, and the response must collect
-            (QueryOps.booleanQuery(df, ps).limit(500), "boolean scan")
-          case _ if req.hasField(qd.findFieldByName("projection")) =>
-            // projection-only query (e.g. COUNT over the whole entity)
-            (df, "entity scan")
-          case _ => throw new IllegalArgumentException("query needs nnq and/or bq")
-        }
+    val entity = Entity.open(spark, base, str(fromMsg, "entity"))
+    val nnqMsg =
+      if (req.hasField(qd.findFieldByName("nnq"))) Some(sub(req, "nnq")) else None
+    // partition-restricted scan (reference RankingQuery.partitions)
+    val df = nnqMsg.fold(entity.read())(m =>
+      restrictPartitions(entity, entity.read(), nnqPartitions(m)))
+    val preds =
+      if (req.hasField(qd.findFieldByName("bq"))) wherePredicates(sub(req, "bq"), "where")
+      else Nil
+    if (nnqMsg.isEmpty && preds.isEmpty && req.hasField(qd.findFieldByName("projection")))
+      (df, "entity scan") // projection-only query (e.g. COUNT over the whole entity)
+    else {
+      // hints (reference HintBasedScanExpression): one naming a saved
+      // index routes through it, the rest walk the planner
+      val routed = QueryOps.route(entity, df, Entity.ApId, nnqMsg.map(parseNnq), preds,
+        strs(req, "hints"), index = None)
+      // this door refuses a stale index; the HTTP door serves it flagged
+      require(!routed.stale, s"${routed.source}: index is stale")
+      // a bare Boolean scan is unbounded and the response collects: page
+      // cap as on the HTTP door
+      (if (nnqMsg.isEmpty) routed.frame.limit(500) else routed.frame, routed.source)
+    }
   }
 
   // ---- lifecycle -----------------------------------------------------------

@@ -15,6 +15,30 @@ import org.apache.spark.sql.functions._
   */
 object SetAlgebra {
 
+  /** Combine two child results by operation name — the one name table
+    * both front doors decode into: union (also the empty name), intersect
+    * (alias join), except, fuzzy_union (alias fuzzyunion) and
+    * fuzzy_intersect (alias fuzzyintersect). Each child is first reduced
+    * to `(idCol, distance)`: its own distance column, or 0 for a plain id
+    * set ([[scored]]). */
+  def combine(op: String, left: DataFrame, right: DataFrame, idCol: String): DataFrame = {
+    val (l, r) = (scored(left, idCol), scored(right, idCol))
+    op.toLowerCase match {
+      case "" | "union" => union(l, r, idCol)
+      case "intersect" | "join" => intersect(l, r, idCol)
+      case "except" => except(l, r, idCol)
+      case "fuzzy_union" | "fuzzyunion" => fuzzyUnion(l, r, idCol)
+      case "fuzzy_intersect" | "fuzzyintersect" => fuzzyIntersect(l, r, idCol)
+      case other => throw new IllegalArgumentException(s"unknown set operation: $other")
+    }
+  }
+
+  /** A result reduced to `(idCol, distance)`: its own distance column, or
+    * distance 0 for a plain id set. */
+  def scored(df: DataFrame, idCol: String): DataFrame =
+    if (df.columns.contains("distance")) df.select(col(idCol), col("distance"))
+    else df.select(col(idCol), lit(0.0).as("distance"))
+
   /** Bag union of id sets, distance := 0 (reference does NOT dedupe, `:147`). */
   def union(left: DataFrame, right: DataFrame, idCol: String): DataFrame =
     left.select(idCol).union(right.select(idCol))

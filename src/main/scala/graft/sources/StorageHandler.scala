@@ -268,6 +268,9 @@ object StorageHandlers {
   val all: Map[String, StorageHandler] =
     Seq(parquet, orc, json, csv).map(h => h.name -> h).toMap
 
+  /** Every handler name an entity can use, sorted. */
+  def names: Seq[String] = (all.keys.toSeq ++ Seq("keyvalue", "compound")).sorted
+
   def apply(name: String): StorageHandler =
     all.getOrElse(name, throw new IllegalArgumentException(s"no handler: $name"))
 

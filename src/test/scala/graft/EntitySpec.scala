@@ -602,6 +602,28 @@ class EntitySpec extends SparkSpec {
     e.drop()
   }
 
+  test("an index built over a read taken before an insert saves stale") {
+    val base = freshBase()
+    val e = Entity.create(spark, base, "late")
+    val rows = (0L until 60L).map(i =>
+      (i, Seq.tabulate(8)(d => ((i * 7 + d * 3) % 13).toFloat)))
+    e.insert(rows.toDF("vid", "vec"))
+    val builtAt = e.stamp
+    val scanned = e.read()
+    e.insert(Seq((100L, Seq.fill(8)(1.0f))).toDF("vid", "vec")) // lands mid-build
+    e.saveIndex("va_late",
+      graft.index.VAIndex.buildFixed(scanned, "vid", "vec", p = 2.0), builtAt = builtAt)
+    e.loadIndex("va_late").stale shouldBe true
+    // the shared build-and-save stamps its own scan: fresh until the next insert
+    graft.api.IndexOps.createAll(e, "vec", Seq("vaf"), idCol = "vid") shouldBe Seq("vaf_vec")
+    e.loadIndex("vaf_vec").stale shouldBe false
+    e.indexBuildInfo("vaf_vec") shouldBe Map(
+      "indextype" -> "vaf", "attribute" -> "vec", "idcol" -> "vid")
+    e.insert(Seq((101L, Seq.fill(8)(2.0f))).toDF("vid", "vec"))
+    e.loadIndex("vaf_vec").stale shouldBe true
+    e.drop()
+  }
+
   test("exists / list / duplicate-create rejection") {
     val base = freshBase()
     Entity.create(spark, base, "one")

@@ -7,8 +7,13 @@ import org.scalatest.matchers.should.Matchers
 /** Shared local SparkSession for all suites (mirrors the reference's
   * single shared session in `AdamTestBase.scala:28-30`). */
 object SharedSpark {
+  // bucketed catalog tables (PlannerSpec's co-located joins) land under
+  // target/, not in the working directory
   lazy val spark: SparkSession =
-    graft.core.GraftSession.builder("local[4]", 4).appName("graft-test").getOrCreate()
+    graft.core.GraftSession.builder("local[4]", 4).appName("graft-test")
+      .config("spark.sql.warehouse.dir",
+        new java.io.File("target/graft-warehouse").getAbsolutePath)
+      .getOrCreate()
 }
 
 abstract class SparkSpec extends AnyFunSuite with Matchers {
