@@ -123,14 +123,14 @@ object IndexOps {
     }
   }
 
-  /** Save what `build` makes of the entity's rows under `recipe`. The
-    * stamp is read BEFORE the build's scan and handed to the build, so
-    * rows that land meanwhile leave the index stale, never falsely
-    * fresh. */
+  /** Save what `build` makes of the entity's rows under `recipe`, with
+    * the stamp of the snapshot it scans (its files were listed after the
+    * stamp was read), so rows that land meanwhile leave the index stale,
+    * never falsely fresh. */
   private def buildAndSave(e: Entity, name: String, recipe: Map[String, String])
                           (build: ((Int, Int), DataFrame) => VectorIndex): String = {
-    val builtAt = e.stamp
-    e.saveIndex(name, build(builtAt, e.read()), recipe, builtAt)
+    val s = e.snapshot
+    e.saveIndex(name, build(s.stamp, s.frame), recipe, s.stamp)
     name
   }
 
@@ -354,28 +354,30 @@ object QueryOps {
                           plan: Option[Planner.Plan], stale: Boolean)
 
   /** The one kNN/Boolean router behind both front doors, over `frame` (a
-    * read of `entity`). A kNN query without predicates takes, in order: a
-    * named stored index (`index`, else the first hint naming one), the
-    * planner's walk of the remaining hints over the entity's fresh
-    * indexes, the sequential scan. With predicates it is a filtered kNN;
-    * without a kNN query, a Boolean scan. A stale named index still
-    * serves and is flagged — refusing it is the caller's policy. */
-  def route(entity: Entity, frame: DataFrame, idCol: String, nnq: Option[NnQuery],
+    * snapshot's frame, or a restriction of it). A kNN query without
+    * predicates takes, in order: a named stored index (`index`, else the
+    * first hint naming one), the planner's walk of the remaining hints
+    * over the snapshot's fresh indexes, the sequential scan. With
+    * predicates it is a filtered kNN; without a kNN query, a Boolean
+    * scan. A stale named index still serves and is flagged — refusing it
+    * is the caller's policy. */
+  def route(snapshot: Entity.Snapshot, frame: DataFrame, idCol: String, nnq: Option[NnQuery],
             predicates: Seq[BooleanPredicates.Predicate], hints: Seq[String],
             index: Option[String]): Routed = (nnq, predicates) match {
     case (Some(q), Nil) =>
       val named = index.orElse(
-        if (hints.isEmpty) None else { val stored = entity.listIndexes; hints.find(stored.contains) })
+        if (hints.isEmpty) None
+        else { val stored = snapshot.listIndexes; hints.find(stored.contains) })
       val plannerHints = Planner.hintsByName(hints)
       named match {
         case Some(name) =>
-          val loaded = entity.loadIndex(name)
+          val loaded = snapshot.loadIndex(name)
           Routed(this.index(frame, idCol, loaded.index, q), s"index scan ($name)",
             Some(Planner.IndexPlan(loaded.index)), loaded.stale)
         case None if plannerHints.nonEmpty =>
           // a sequential-only walk never touches the index store
           val indexes =
-            if (plannerHints.forall(_ == Planner.SequentialHint)) Nil else entity.freshIndexes
+            if (plannerHints.forall(_ == Planner.SequentialHint)) Nil else snapshot.freshIndexes
           val plan = choosePlan(frame, indexes, plannerHints, q)
           Routed(runPlan(plan, frame, idCol, q), plan.describe, Some(plan), stale = false)
         case None =>

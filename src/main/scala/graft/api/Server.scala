@@ -179,26 +179,30 @@ class Server private(spark: SparkSession, base: String, http: HttpServer,
     // the same JSON endpoints external clients POST to
     case "/" | "/ui" => serveUi(ex)
     // the two streaming endpoints manage the exchange themselves
-    case "/entity/insert/stream" => handleStreamInsert(ex)
-    case "/query/progressive" => handleProgressive(ex)
+    case "/entity/insert/stream" => Entity.leasing(handleStreamInsert(ex))
+    case "/query/progressive" => Entity.leasing(handleProgressive(ex))
     case path =>
-      val reply =
-        try {
-          val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-          val req = if (body.isEmpty) mapper.createObjectNode() else mapper.readTree(body)
-          val out = route(path, req)
-          out.put("ok", true)
-          (200, out)
-        } catch {
-          case NonFatal(e) =>
-            val err = mapper.createObjectNode()
-            err.put("ok", false)
-            err.put("error", String.valueOf(e.getMessage))
-            (400, err)
-        }
-      val bytes = mapper.writeValueAsBytes(reply._2)
+      // the snapshots the request reads stay leased until its response is
+      // encoded
+      val (status, bytes) = Entity.leasing {
+        val reply =
+          try {
+            val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
+            val req = if (body.isEmpty) mapper.createObjectNode() else mapper.readTree(body)
+            val out = route(path, req)
+            out.put("ok", true)
+            (200, out)
+          } catch {
+            case NonFatal(e) =>
+              val err = mapper.createObjectNode()
+              err.put("ok", false)
+              err.put("error", String.valueOf(e.getMessage))
+              (400, err)
+          }
+        (reply._1, mapper.writeValueAsBytes(reply._2))
+      }
       ex.getResponseHeaders.set("Content-Type", "application/json")
-      ex.sendResponseHeaders(reply._1, bytes.length)
+      ex.sendResponseHeaders(status, bytes.length)
       ex.getResponseBody.write(bytes)
       ex.close()
   }
@@ -246,9 +250,11 @@ class Server private(spark: SparkSession, base: String, http: HttpServer,
 
   /** A kNN request (`index?` names a stored index, `hints?` are walked in
     * order) through the shared router. */
-  private def knnRouted(req: JsonNode, e: Entity, idCol: String): QueryOps.Routed =
-    QueryOps.route(e, e.read(), idCol, Some(nnqOf(req)), Nil, hintsOf(req),
+  private def knnRouted(req: JsonNode, e: Entity, idCol: String): QueryOps.Routed = {
+    val s = e.snapshot
+    QueryOps.route(s, s.frame, idCol, Some(nnqOf(req)), Nil, hintsOf(req),
       if (req.has("index")) Some(reqField(req, "index").asText()) else None)
+  }
 
   /** Evaluate a /search/compound tree node — the HTTP twin of the gRPC
     * compound FROM expression (reference `MessageParser.toExpression`).
@@ -439,8 +445,9 @@ class Server private(spark: SparkSession, base: String, http: HttpServer,
       val e = entity(req, "entity")
       val idCol = reqField(req, "idCol").asText()
       val nnq = nnqOf(req)
-      val indexes = e.freshIndexes
-      val frame = e.read()
+      val snap = e.snapshot
+      val indexes = snap.freshIndexes
+      val frame = snap.frame
 
       ex.getResponseHeaders.set("Content-Type", "application/x-ndjson")
       ex.sendResponseHeaders(200, 0) // length 0 => chunked: lines flush as plans land

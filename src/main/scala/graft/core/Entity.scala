@@ -1,12 +1,13 @@
 package graft.core
 
-import java.nio.file.{Files, Path, Paths}
-import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
+import com.fasterxml.jackson.databind.JsonNode
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Materialize.Ops
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Entity lifecycle over Parquet — the reference's DDL/DML surface
   * (`/root/reference/src/main/scala/org/vitrivr/adampro/data/entity/Entity.scala:295-450`,
@@ -19,9 +20,29 @@ import org.apache.spark.sql.types.StructType
   * every whole-table mutation (delete/vacuum/sparsify) writes a NEW
   * versioned directory and then swaps the catalog pointer — the
   * reference's write-new-storename-then-drop-old overwrite dance
-  * (`StorageHandler.scala:122-170`), which gives readers-at-old-version
-  * isolation and crash safety without a commit protocol. Stale versions
-  * are removed on the next successful swap.
+  * (`StorageHandler.scala:122-170`), crash-safe without a commit
+  * protocol. `_meta.json` also records the schema readers see, so a read
+  * never runs a schema-discovery job.
+  *
+  * Reads go through one [[Entity.Snapshot]] per [[stamp]]: the read
+  * frame (its file list taken once), the row count (from the parquet
+  * footers) and the loaded indexes. It lives until the stamp moves or a
+  * mutation block ([[exclusively]]: every insert, mutation and index
+  * save/drop/repartition) ends, and is shared by every handle this JVM
+  * opens on the entity.
+  *
+  * Isolation is by lease. A snapshot holds a lease on its version
+  * directory while it is the current one, and [[Entity.leasing]] holds
+  * the lease of every snapshot its block reads until the block returns —
+  * both front doors run each request inside one, until its response is
+  * encoded. A swap deletes a superseded version only once its last
+  * lease is released, so a leased frame still collects the old rows
+  * after a vacuum; unleased versions older than [[retainVersions]] are
+  * swept at every swap, crash leftovers included. A frame read outside
+  * a lease may lose its files to the next mutation's swap. Leases are
+  * per JVM: a second process mutating the same base moves the stamp, so
+  * this process's next read sees its change, but that process is not
+  * held back by this one's leases.
   *
   * `ap_id` layout: `insertCount (15 bits) | monotonically_increasing_id
   * (48 bits)` — unique for ≤32k insert batches × ≤32k partitions ×
@@ -39,16 +60,22 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
   private def groupsPath: Path = dir.resolve("_groups.json")
 
   private def meta: Meta = readMeta(metaPath)
-  private def dataPath(v: Int): Path = dir.resolve(s"data_v$v")
+  private def dataPath(v: Int): Path = dataPathOf(dir, v)
+  private def shared: Shared = sharedOf(dir)
 
   /** Run `f` holding this entity's mutation lock. Every mutating method
     * takes it, so mutations from any caller (either front door, the
     * streaming path, library code) serialize per entity: each is a
     * read-modify-write of `_meta.json`. Reads stay lock-free — a reader
-    * mid-swap sees the old version. Reentrant (an insert may vacuum). */
-  private[graft] def exclusively[T](f: => T): T = lockOf(dir).synchronized(f)
+    * mid-swap sees the old version. Reentrant (an insert may vacuum).
+    * The block's end retires the current snapshot, so the next read sees
+    * what it wrote, indexes included. */
+  private[graft] def exclusively[T](f: => T): T = {
+    val sh = shared
+    sh.mutation.synchronized(try f finally sh.retire())
+  }
 
-  def schema: StructType = read().schema
+  def schema: StructType = snapshot.schema
 
   /** Attributes stored outside the primary parquet store, per handler —
     * the reference's per-attribute storage-handler assignment
@@ -65,20 +92,60 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
     case other => graft.sources.StorageHandlers(other)
   }
 
-  def read(): DataFrame = {
-    val m = meta
+  /** The current snapshot's read frame. */
+  def read(): DataFrame = snapshot.frame
+
+  /** The snapshot of the current [[stamp]]: built by the first read after
+    * the stamp moves, then shared until it moves again or a mutation
+    * block ends. Inside [[Entity.leasing]] it stays leased — its version
+    * directory kept — until the block returns. */
+  def snapshot: Snapshot = {
+    val s = acquire()
+    Entity.held.get match {
+      case null => s.release()
+      case held => held += s
+    }
+    s
+  }
+
+  /** The current snapshot with one reference taken for the caller. A
+    * pending stamp (an insert's writes in flight) is never made current:
+    * each read in that window builds its own. */
+  private def acquire(): Snapshot = {
+    val sh = shared
+    val (m, cached, ticket) = sh.synchronized {
+      val m = meta
+      Option(sh.current).filter(c => c.stamp == stampOf(m) && (c.frame.sparkSession eq spark)) match {
+        case Some(c) => c.retain(); (m, Some(c), 0L)
+        case None => sh.lease(m.version); (m, None, sh.ticket())
+      }
+    }
+    cached.getOrElse {
+      val groups = attributeGroups
+      val s = try new Snapshot(sh, dir.toString, stampOf(m), m.version, frameOf(m, groups),
+        footerCount = groups.isEmpty, ticket)
+      catch { case e: Throwable => sh.synchronized(sh.unlease(m.version)); throw e }
+      if (!m.pending) sh.synchronized(sh.install(s))
+      s
+    }
+  }
+
+  /** Version `m`'s rows: the primary store read with its recorded schema
+    * (inferred, one Spark job, for a store written before schemas were
+    * recorded), each external attribute group joined back on. */
+  private def frameOf(m: Meta, groups: Seq[AttributeGroup]): DataFrame =
     if (m.version == 0) spark.emptyDataFrame
     else {
-      val main = spark.read.parquet(dataPath(m.version).toString)
+      val path = dataPath(m.version).toString
+      val main = m.schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
       // vertical reassembly: equi-join each external group back on the
       // system id (1:1 by construction — every store was written from
       // the same full frame)
-      attributeGroups.foldLeft(main) { (acc, g) =>
+      groups.foldLeft(main) { (acc, g) =>
         acc.join(handlerFor(g.handler).read(spark, dir.resolve(g.store).toString)
           .select((ApId +: g.attrs).map(col): _*), Seq(ApId))
       }
     }
-  }
 
   // ---- cluster-partitioned physical layout (reference repartitionEntity,
   // `DataDefintion.scala:489-560` + `ECPPartitioner.scala:27-105`) ----
@@ -102,35 +169,32 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
     require(m.version > 0, "empty entity")
     val df = read().drop(Partitioning.PartitionCol)
     val next = m.version + 1
-    mode match {
+    def byKey(keyed: DataFrame) = writeStore(
+      keyed.repartition(col(Partitioning.PartitionCol)), dataPath(next), partitioned = true)
+    val written = mode match {
       case Partitioning.Ecp(vecCol, k) =>
         val centers = Partitioning.trainLeaders(df, vecCol, k)
-        Partitioning.assignLeaders(df, vecCol, centers)
-          .repartition(col(Partitioning.PartitionCol))
-          .write.mode("overwrite").partitionBy(Partitioning.PartitionCol)
-          .parquet(dataPath(next).toString)
+        val schema = byKey(Partitioning.assignLeaders(df, vecCol, centers))
         writeLayout(layoutPath, Layout("ecp", vecCol, centers))
+        schema
       case Partitioning.ByColumn(c) =>
-        df.withColumn(Partitioning.PartitionCol, col(c))
-          .repartition(col(Partitioning.PartitionCol))
-          .write.mode("overwrite").partitionBy(Partitioning.PartitionCol)
-          .parquet(dataPath(next).toString)
+        val schema = byKey(df.withColumn(Partitioning.PartitionCol, col(c)))
         writeLayout(layoutPath, Layout("bycolumn", c, Array.empty))
+        schema
       case Partitioning.Tile(x, y, cell) =>
-        df.withColumn(Partitioning.PartitionCol,
-            Partitioning.tileKey(col(x), col(y), cell))
-          .repartition(col(Partitioning.PartitionCol))
-          .write.mode("overwrite").partitionBy(Partitioning.PartitionCol)
-          .parquet(dataPath(next).toString)
+        val schema = byKey(df.withColumn(Partitioning.PartitionCol,
+          Partitioning.tileKey(col(x), col(y), cell)))
         // keyCol carries "x,y"; the cell rides the (otherwise ecp-only)
         // centroids slot so the descriptor schema stays unchanged
         writeLayout(layoutPath, Layout("tile", s"$x,$y", Array(Array(cell))))
+        schema
       case other =>
-        Partitioning.repartition(df, other)
-          .write.mode("overwrite").parquet(dataPath(next).toString)
+        val schema = writeStore(Partitioning.repartition(df, other), dataPath(next),
+          partitioned = false)
         Files.deleteIfExists(layoutPath)
+        schema
     }
-    swap(m.copy(version = next))
+    swap(m.copy(version = next, schema = Some(written)))
     foldGroupsAfterRewrite()
     this
   }
@@ -183,12 +247,25 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
   }
 
   /** Layout-aware rewrite: partitioned entities keep their directory
-    * layout through delete/vacuum/sparsify rewrites. */
-  private def writeData(df: DataFrame, path: Path): Unit =
-    if (layout.isDefined && df.columns.contains(Partitioning.PartitionCol))
-      df.write.mode("overwrite").partitionBy(Partitioning.PartitionCol)
-        .parquet(path.toString)
-    else df.write.mode("overwrite").parquet(path.toString)
+    * layout through delete/vacuum/sparsify rewrites. Returns the schema
+    * to record, as [[writeStore]]. */
+  private def writeData(df: DataFrame, path: Path): StructType =
+    writeStore(df, path,
+      partitioned = layout.isDefined && df.columns.contains(Partitioning.PartitionCol))
+
+  /** Write `df` as the version store at `path` and return the schema a
+    * read of it has, which `_meta.json` records: Spark reads parquet back
+    * all-nullable, and a layout's partition column comes last, typed from
+    * the directory names. Found by listing the written files — no Spark
+    * job. */
+  private def writeStore(df: DataFrame, path: Path, partitioned: Boolean): StructType = {
+    val w = df.write.mode("overwrite")
+    (if (partitioned) w.partitionBy(Partitioning.PartitionCol) else w).parquet(path.toString)
+    val data =
+      if (partitioned) StructType(df.schema.filterNot(_.name == Partitioning.PartitionCol))
+      else df.schema
+    spark.read.schema(data).parquet(path.toString).schema
+  }
 
 
   /** Whole-table rewrites write the REASSEMBLED frame back into the
@@ -205,18 +282,9 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
     }
   }
 
-  def count(): Long = if (meta.version == 0) 0L else read().count()
-
-  /** Row count memoized by [[stamp]] — for introspection endpoints that
-    * must not pay a full corpus scan per call. Any mutation moves the
-    * stamp, so a cached value can never be served for changed data;
-    * the cache is companion-level because callers open fresh Entity
-    * handles per request. */
-  def cachedCount(): Long =
-    Entity.countCache.getOrElseUpdate((dir.toString, stamp), {
-      if (Entity.countCache.size >= 1024) Entity.countCache.clear()
-      count()
-    })
+  /** The current snapshot's row count (parquet footers, no Spark job,
+    * unless attribute groups make the read a join). */
+  def count(): Long = snapshot.count
 
   /** Append rows; assigns `ap_id` unless the frame already carries one.
     *
@@ -248,8 +316,8 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
     def schemaKey(df: DataFrame): Set[(String, String)] =
       df.schema.fields.map(f => f.name -> f.dataType.sql).toSet
     if (m.version == 0) {
-      withId.write.mode("overwrite").parquet(dataPath(1).toString)
-      swap(m.copy(version = 1, insertCount = batch))
+      val written = writeStore(withId, dataPath(1), partitioned = false)
+      swap(m.copy(version = 1, insertCount = batch, schema = Some(written)))
     } else if (schemaKey(read()) == schemaKey(withId)) {
       val groups = attributeGroups
       // with external groups the batch is split per store; pin the
@@ -301,8 +369,9 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
           partFileCount(dataPath(m.version)) > effectiveCap) vacuum()
     } else { // schema drift (names OR types): align via union and rewrite once
       val next = m.version + 1
-      writeData(read().unionByName(withId, allowMissingColumns = true), dataPath(next))
-      swap(m.copy(version = next, insertCount = batch))
+      val written = writeData(
+        read().unionByName(withId, allowMissingColumns = true), dataPath(next))
+      swap(m.copy(version = next, insertCount = batch, schema = Some(written)))
     }
     this
   }
@@ -315,7 +384,7 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
       val current = read()
       val keep = current.filter(!coalesce(predicate, lit(false)))
       val next = m.version + 1
-      writeData(keep, dataPath(next))
+      val written = writeData(keep, dataPath(next))
       // deleted = rows(v) − rows(v+1). With no external attribute groups
       // both versions are plain parquet stores, so the counts come off the
       // parquet FOOTERS, read driver-side — zero Spark jobs where the old
@@ -327,31 +396,21 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
         if (attributeGroups.isEmpty)
           parquetRowCount(dataPath(m.version)) - parquetRowCount(dataPath(next))
         else current.count() -
-          spark.read.parquet(dataPath(next).toString).count()
-      swap(m.copy(version = next))
+          spark.read.schema(written).parquet(dataPath(next).toString).count()
+      swap(m.copy(version = next, schema = Some(written)))
       foldGroupsAfterRewrite()
       deleted
     }
   }
 
-  /** Total row count of a parquet store from its file footers — a
-    * driver-side metadata read, no Spark job. */
+  /** Total row count of a parquet store from its file footers. */
   private def parquetRowCount(p: Path): Long = {
-    val conf = spark.sessionState.newHadoopConf()
     val stream = Files.walk(p)
     try {
-      val it = stream.iterator()
-      var total = 0L
-      while (it.hasNext) {
-        val f = it.next()
-        if (Files.isRegularFile(f) && f.getFileName.toString.endsWith(".parquet")) {
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new org.apache.hadoop.fs.Path(f.toUri), conf))
-          try total += r.getRecordCount finally r.close()
-        }
-      }
-      total
+      import scala.jdk.CollectionConverters._
+      footerRows(spark, stream.iterator().asScala
+        .filter(f => Files.isRegularFile(f) && f.getFileName.toString.endsWith(".parquet"))
+        .map(_.toUri.toString)).sum
     } finally stream.close()
   }
 
@@ -398,8 +457,8 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
       val merged = kept.select(current.columns.map(col): _*)
         .unionByName(withId.select(current.columns.map(col): _*))
       val next = m.version + 1
-      writeData(merged, dataPath(next))
-      swap(m.copy(version = next, insertCount = batch))
+      val written = writeData(merged, dataPath(next))
+      swap(m.copy(version = next, insertCount = batch, schema = Some(written)))
       foldGroupsAfterRewrite()
       this
     }
@@ -415,8 +474,8 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
       val df =
         if (layout.isDefined) read().repartition(col(Partitioning.PartitionCol))
         else read().repartition(numPartitions)
-      writeData(df, dataPath(next))
-      swap(m.copy(version = next))
+      val written = writeData(df, dataPath(next))
+      swap(m.copy(version = next, schema = Some(written)))
       foldGroupsAfterRewrite()
     }
     this
@@ -439,8 +498,8 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
       transform(zipped, _.getField("v")).as("values"),
       size(col(vecCol)).as("length"))
     val next = m.version + 1
-    writeData(df.withColumn(vecCol, sparse), dataPath(next))
-    swap(m.copy(version = next))
+    val written = writeData(df.withColumn(vecCol, sparse), dataPath(next))
+    swap(m.copy(version = next, schema = Some(written)))
     foldGroupsAfterRewrite()
     this
   }
@@ -489,7 +548,7 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
       g.copy(store = s"ext_v${next}_${i}_${g.handler}")
     }
     val grouped = rebuilt.flatMap(_.attrs).toSet
-    writeData(full.select(
+    val written = writeData(full.select(
       full.columns.filterNot(grouped.contains).map(col): _*), dataPath(next))
     rebuilt.foreach(g => handlerFor(g.handler).write(spark,
       dir.resolve(g.store).toString,
@@ -497,7 +556,7 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
     val oldStores = attributeGroups
     if (rebuilt.isEmpty) Files.deleteIfExists(groupsPath)
     else writeGroups(groupsPath, rebuilt)
-    swap(m.copy(version = next))
+    swap(m.copy(version = next, schema = Some(written)))
     oldStores.foreach(g => scala.util.Try(
       handlerFor(g.handler).drop(spark, dir.resolve(g.store).toString)))
     } finally full.unpersist()
@@ -529,10 +588,7 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
     * that window records a value no completed state ever equals, so
     * stamp equality always implies the data was fully visible at build
     * time — without giving up the retry-safe counter-first burn. */
-  def stamp: (Int, Int) = {
-    val m = meta
-    (m.version, if (m.pending) -m.insertCount else m.insertCount)
-  }
+  def stamp: (Int, Int) = stampOf(meta)
 
   /** Persist an index built over this entity. `builtAt` is the stamp the
     * build's scan saw — take it BEFORE `read()`, so rows that land during
@@ -550,10 +606,9 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
   def indexBuildInfo(name: String): Map[String, String] =
     graft.index.IndexStore.buildInfo(dir.toString, name)
 
-  /** Reload a persisted index; `stale` is true iff the entity mutated
-    * (insert/delete/vacuum/sparsify) since the index was saved. */
-  def loadIndex(name: String): graft.index.IndexStore.Loaded =
-    graft.index.IndexStore.load(spark, dir.toString, name, Some(stamp))
+  /** A persisted index, loaded once per snapshot; `stale` is true iff the
+    * entity mutated (insert/delete/vacuum/sparsify) since it was saved. */
+  def loadIndex(name: String): graft.index.IndexStore.Loaded = snapshot.loadIndex(name)
 
   /** The entity stamp recorded when the index was saved — same-version
     * drift means append-only mutation since the save. */
@@ -564,8 +619,7 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
 
   /** Every stored index that is fresh against the current stamp — the
     * candidate set the planner and the plan race choose from. */
-  def freshIndexes: Seq[graft.index.VectorIndex] =
-    listIndexes.map(loadIndex).filterNot(_.stale).map(_.index)
+  def freshIndexes: Seq[graft.index.VectorIndex] = snapshot.freshIndexes
 
   def dropIndex(name: String): Unit =
     exclusively(graft.index.IndexStore.drop(dir.toString, name))
@@ -587,34 +641,15 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
     // swap is only called once a mutation's data is fully written — a
     // pending flag inherited from an earlier crashed insert clears here
     writeMeta(metaPath, m.copy(pending = false))
-    // retention: keep the newest `retain` versioned snapshots, delete
-    // the rest (retain = 1, the default, reproduces the old behavior:
-    // only the live version survives a swap)
-    versions.filter(_ <= m.version - math.max(1, m.retain))
-      .foreach(v => deleteRecursively(dataPath(v)))
+    val sh = shared
+    sh.synchronized(sh.sweep())
   }
 
   /** Versioned snapshot directories currently on disk, oldest first.
     * Each whole-table mutation (delete/vacuum/sparsify/layout/merge)
     * produces a new version; with [[retainVersions]] > 1 the previous
     * ones survive as readable snapshots. */
-  def versions: Seq[Int] = {
-    if (!Files.exists(dir)) return Nil
-    val live = meta.version
-    val s = Files.list(dir)
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("data_v"))
-        .flatMap(n => scala.util.Try(n.stripPrefix("data_v").toInt).toOption)
-        // dirs ABOVE the committed meta version are crash leftovers from
-        // a mutation that died before its swap — never serve them as
-        // snapshots (the next mutation overwrites them, writeData is
-        // mode=overwrite)
-        .filter(_ <= live)
-        .toSeq.sorted
-    } finally s.close()
-  }
+  def versions: Seq[Int] = if (!Files.exists(dir)) Nil else versionsOn(dir, meta.version)
 
   /** Keep the newest `k` versioned snapshots across future mutations —
     * the reproducibility knob for training pipelines (pin the exact
@@ -691,10 +726,189 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
 object Entity {
   val ApId = "ap_id"
 
-  /** (entity dir, stamp) → row count, for [[Entity.cachedCount]];
-    * bounded, cleared wholesale at the cap. */
-  private[core] val countCache =
-    scala.collection.concurrent.TrieMap.empty[(String, (Int, Int)), Long]
+  /** One version of an entity as readers see it, for one [[Entity.stamp]]:
+    * the read frame (its file list taken when it was built), the row
+    * count and the stored indexes, each loaded once. Shared by every
+    * handle this JVM opens on the entity while it is current; see the
+    * [[Entity]] scaladoc for its lifetime and leases. */
+  final class Snapshot private[Entity] (shared: Shared, dir: String, val stamp: (Int, Int),
+                                        version: Int, val frame: DataFrame,
+                                        footerCount: Boolean, private[Entity] val ticket: Long) {
+    /** References: the caller that built it, the current-snapshot slot,
+      * each lease. Guarded by `shared`; the version's lease goes at 0. */
+    private var refs = 1
+    private val pins = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+    private val loaded = scala.collection.concurrent.TrieMap
+      .empty[(String, java.nio.file.attribute.FileTime), graft.index.IndexStore.Loaded]
+
+    def schema: StructType = frame.schema
+
+    /** Rows, from the parquet footers of the frame's files (driver-side,
+      * no Spark job); a read joined with attribute groups counts by job. */
+    lazy val count: Long =
+      if (version == 0) 0L
+      else if (footerCount) shared.rows(frame.sparkSession, version, frame.inputFiles)
+      else frame.count()
+
+    def listIndexes: Seq[String] = graft.index.IndexStore.list(dir)
+
+    /** The stored index, loaded once per save (a save by another process
+      * replaces it); `stale` compares its build stamp with this
+      * snapshot's. */
+    def loadIndex(name: String): graft.index.IndexStore.Loaded =
+      loaded.getOrElseUpdate((name, graft.index.IndexStore.savedAt(dir, name)),
+        graft.index.IndexStore.load(frame.sparkSession, dir, name, Some(stamp)))
+
+    def freshIndexes: Seq[graft.index.VectorIndex] =
+      listIndexes.map(loadIndex).filterNot(_.stale).map(_.index)
+
+    /** Persist `df` — this snapshot's frame or one of its index tables —
+      * and materialize it now. It is unpersisted when this snapshot stops
+      * being current: Spark matches cached plans by path, so a pin that
+      * outlived its snapshot would answer for newer rows. */
+    def pin(df: DataFrame): Unit =
+      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
+        df.persist()
+        df.count()
+        val kept = shared.synchronized((shared.current eq this) && pins.add(df))
+        if (!kept) df.unpersist(blocking = false)
+      }
+
+    private[Entity] def retain(): Unit = refs += 1
+
+    private[Entity] def unpin(): Unit =
+      Iterator.continually(pins.poll()).takeWhile(_ != null)
+        .foreach(_.unpersist(blocking = false))
+
+    private[Entity] def release(): Unit = shared.synchronized {
+      refs -= 1
+      if (refs == 0) shared.unlease(version)
+    }
+  }
+
+  /** Run `f` holding, until it returns, the lease of every snapshot it
+    * reads on this thread ([[Entity.read]], [[Entity.snapshot]], counts and
+    * index loads): a superseded version they read stays on disk until
+    * then. The front doors run each request inside one. Nested blocks
+    * join the outermost. */
+  def leasing[T](f: => T): T =
+    if (held.get != null) f
+    else {
+      val snaps = scala.collection.mutable.ArrayBuffer.empty[Snapshot]
+      held.set(snaps)
+      try f
+      finally {
+        held.remove()
+        snaps.foreach(_.release())
+      }
+    }
+
+  private val held = new ThreadLocal[scala.collection.mutable.ArrayBuffer[Snapshot]]
+
+  /** What every handle on one entity directory shares in this JVM: the
+    * mutation lock, the current snapshot and the version leases. All but
+    * `mutation` are guarded by this object's monitor, which is held only
+    * for bookkeeping and sweeps, never across a Spark job. */
+  private final class Shared(dir: Path) {
+    val mutation = new Object
+    var current: Snapshot = null
+    private var tickets = 0L
+    /** Snapshots with a ticket up to this one predate the last retire. */
+    private var retiredUpTo = 0L
+    /** Version → live snapshots over it. */
+    private val leases = scala.collection.mutable.Map.empty[Int, Int]
+    /** Rows per part file of the last counted version: a version's files
+      * never change once written (appends add files), so a count after
+      * an append reads only the new files' footers. */
+    private var counted = (0, Map.empty[String, Long])
+
+    def rows(spark: SparkSession, version: Int, files: Seq[String]): Long = {
+      val known = synchronized(if (counted._1 == version) counted._2 else Map.empty[String, Long])
+      val (seen, fresh) = files.partition(known.contains)
+      val now = seen.map(f => f -> known(f)).toMap ++ fresh.zip(footerRows(spark, fresh.iterator))
+      synchronized { counted = (version, now) }
+      now.values.sum
+    }
+
+    def ticket(): Long = { tickets += 1; tickets }
+
+    def lease(v: Int): Unit = leases(v) = leases.getOrElse(v, 0) + 1
+
+    def unlease(v: Int): Unit = leases.get(v) match {
+      case Some(n) if n > 1 => leases(v) = n - 1
+      case _ => leases.remove(v); sweep()
+    }
+
+    /** Make `s` current unless a retire or a later snapshot came first. */
+    def install(s: Snapshot): Unit =
+      if (s.ticket > retiredUpTo && (current == null || current.ticket < s.ticket)) {
+        s.retain()
+        replace(s)
+      }
+
+    def retire(): Unit = synchronized {
+      retiredUpTo = tickets
+      replace(null)
+    }
+
+    private def replace(s: Snapshot): Unit = {
+      val old = current
+      current = s
+      if (old != null) { old.unpin(); old.release() }
+    }
+
+    /** Delete every version older than the newest `retain` that no
+      * snapshot leases — superseded versions and crash leftovers alike. */
+    def sweep(): Unit = {
+      val metaFile = dir.resolve("_meta.json")
+      if (Files.exists(metaFile)) {
+        val m = readMeta(metaFile)
+        versionsOn(dir, m.version)
+          .filter(v => v <= m.version - math.max(1, m.retain) && !leases.contains(v))
+          .foreach(v => deleteRecursively(dataPathOf(dir, v)))
+      }
+    }
+  }
+
+  private val shareds = new java.util.concurrent.ConcurrentHashMap[String, Shared]()
+  private def sharedOf(dir: Path): Shared = {
+    val d = dir.toAbsolutePath.normalize
+    shareds.computeIfAbsent(d.toString, _ => new Shared(d))
+  }
+
+  private def dataPathOf(dir: Path, v: Int): Path = dir.resolve(s"data_v$v")
+
+  private def stampOf(m: Meta): (Int, Int) =
+    (m.version, if (m.pending) -m.insertCount else m.insertCount)
+
+  /** Version directories on disk up to `live`, oldest first. */
+  private def versionsOn(dir: Path, live: Int): Seq[Int] = {
+    val s = Files.list(dir)
+    try {
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("data_v"))
+        .flatMap(n => scala.util.Try(n.stripPrefix("data_v").toInt).toOption)
+        // dirs ABOVE the committed meta version are crash leftovers from
+        // a mutation that died before its swap — never serve them as
+        // snapshots (the next mutation overwrites them, writeData is
+        // mode=overwrite)
+        .filter(_ <= live)
+        .toSeq.sorted
+    } finally s.close()
+  }
+
+  /** Rows of each parquet file (URI) from its footer — a driver-side
+    * metadata read, no Spark job. */
+  private def footerRows(spark: SparkSession, files: Iterator[String]): Iterator[Long] = {
+    val conf = spark.sessionState.newHadoopConf()
+    files.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f), conf))
+      try r.getRecordCount finally r.close()
+    }
+  }
 
   /** Part-file count above which an append triggers a compacting vacuum
     * (reference auto-vacuum default, `Entity.scala:376-386`). */
@@ -705,7 +919,8 @@ object Entity {
     * completed state so an index saved mid-insert can never read as
     * fresh afterwards. */
   private[core] case class Meta(name: String, version: Int, insertCount: Int,
-                                pending: Boolean = false, retain: Int = 1)
+                                pending: Boolean = false, retain: Int = 1,
+                                schema: Option[StructType] = None)
 
   /** Persisted directory-layout descriptor: `mode` ∈ {ecp, bycolumn},
     * `keyCol` = vector column (ecp) or partition key (bycolumn),
@@ -713,10 +928,6 @@ object Entity {
   final case class Layout(mode: String, keyCol: String, centroids: Array[Array[Double]])
 
   private val jackson = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  private val mutationLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def lockOf(dir: Path): Object =
-    mutationLocks.computeIfAbsent(dir.toAbsolutePath.normalize.toString, _ => new Object)
 
   private def writeLayout(p: Path, l: Layout): Unit = {
     val root = jackson.createObjectNode()
@@ -764,11 +975,17 @@ object Entity {
     Some(Layout(root.get("mode").asText(), root.get("keyCol").asText(), centroids))
   }
 
-  private def writeMeta(p: Path, m: Meta): Unit =
-    Files.write(p, (s"""{"name":"${m.name}","version":${m.version},""" +
-      s""""insertCount":${m.insertCount},"pending":${m.pending},""" +
-      s""""retain":${m.retain}}""")
-      .getBytes(StandardCharsets.UTF_8))
+  /** Replaced whole by a rename, so a lock-free reader never sees a
+    * half-written file. */
+  private def writeMeta(p: Path, m: Meta): Unit = {
+    val root = jackson.createObjectNode()
+    root.put("name", m.name).put("version", m.version).put("insertCount", m.insertCount)
+      .put("pending", m.pending).put("retain", m.retain)
+    m.schema.foreach(s => root.set[JsonNode]("schema", jackson.readTree(s.json)))
+    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
+    Files.write(tmp, jackson.writeValueAsBytes(root))
+    Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+  }
 
   private def readMeta(p: Path): Meta = {
     val root = jackson.readTree(Files.readAllBytes(p))
@@ -777,7 +994,10 @@ object Entity {
       // absent in pre-pending meta files → false
       Option(root.get("pending")).exists(_.asBoolean(false)),
       // absent in pre-retention meta files → 1 (keep only the live version)
-      Option(root.get("retain")).map(_.asInt(1)).getOrElse(1))
+      Option(root.get("retain")).map(_.asInt(1)).getOrElse(1),
+      // absent in meta files written before schemas were recorded → the
+      // read infers it
+      Option(root.get("schema")).map(n => DataType.fromJson(n.toString).asInstanceOf[StructType]))
   }
 
   /** Create a new empty entity. Reserved `ap_*` names are rejected for
@@ -785,7 +1005,7 @@ object Entity {
   def create(spark: SparkSession, base: String, name: String): Entity = {
     require(name.nonEmpty && name.matches("[A-Za-z0-9_]+"), s"invalid entity name: $name")
     val dir = Paths.get(base).resolve(name)
-    lockOf(dir).synchronized {
+    sharedOf(dir).mutation.synchronized {
       require(!Files.exists(dir), s"entity $name already exists")
       Files.createDirectories(dir)
       writeMeta(dir.resolve("_meta.json"), Meta(name, 0, 0))
@@ -795,7 +1015,7 @@ object Entity {
 
   /** Open the entity, creating it first when absent (atomically). */
   def openOrCreate(spark: SparkSession, base: String, name: String): Entity =
-    lockOf(Paths.get(base).resolve(name)).synchronized {
+    sharedOf(Paths.get(base).resolve(name)).mutation.synchronized {
       if (exists(base, name)) open(spark, base, name) else create(spark, base, name)
     }
 

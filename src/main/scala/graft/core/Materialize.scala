@@ -1,5 +1,7 @@
 package graft.core
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 
 /** Eager materialization with lineage truncation — the one primitive
@@ -35,6 +37,8 @@ import org.apache.spark.sql.DataFrame
   * only decides where the checkpointed blocks go.
   */
 object Materialize {
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   def apply(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint(eager = true)
@@ -49,8 +53,16 @@ object Materialize {
     * measurably slows REPEATED calls within one session) unless the
     * superseded frames are released eagerly. No-op for frames that are
     * not local checkpoints; reliable checkpoint FILES stay governed by
-    * `spark.cleaner.referenceTracking.cleanCheckpoints`. */
-  def release(df: DataFrame): Unit =
+    * `spark.cleaner.referenceTracking.cleanCheckpoints`.
+    *
+    * Precondition: no lazy derivation of `df` is evaluated after this
+    * call. A local checkpoint's blocks are its ONLY copy of the data (the
+    * lineage is cut), so a frame derived from `df` and run afterwards
+    * fails at action time with no way to recompute. Release a frame only
+    * once everything built on it has been computed or materialized. A
+    * failure to release is logged, never thrown: the blocks then stay
+    * until the ContextCleaner frees them. */
+  private[graft] def release(df: DataFrame): Unit =
     try {
       df.queryExecution.analyzed.collectLeaves().foreach {
         case l: org.apache.spark.sql.execution.LogicalRDD =>
@@ -58,7 +70,10 @@ object Materialize {
             l.rdd.unpersist(blocking = false)
         case _ => ()
       }
-    } catch { case _: Throwable => () }
+    } catch {
+      case NonFatal(e) =>
+        log.warn(s"could not release the blocks of materialized frame $df: $e")
+    }
 
   /** `import graft.core.Materialize.Ops` for `df.materialized`. */
   implicit class Ops(private val df: DataFrame) extends AnyVal {

@@ -70,9 +70,6 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
     * `StopQuery` reach every racing job group of a progressive run. */
   private val running = scala.collection.concurrent.TrieMap.empty[String, () => Unit]
 
-  /** Frames pinned by `CacheEntity`/`CacheIndex` (idempotent per key). */
-  private val cachedFrames = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   // ---- wire plumbing -------------------------------------------------------
 
   private def marshaller(desc: Descriptors.Descriptor) =
@@ -96,7 +93,9 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
       new ServerCalls.UnaryMethod[DynamicMessage, DynamicMessage] {
         override def invoke(req: DynamicMessage,
                             obs: StreamObserver[DynamicMessage]): Unit = {
-          obs.onNext(f(req))
+          // the snapshots the call reads stay leased until its response
+          // message is built
+          obs.onNext(Entity.leasing(f(req)))
           obs.onCompleted()
         }
       })
@@ -260,14 +259,10 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
     u("DropEntity", "EntityNameMessage", "AckMessage") { req =>
       try {
         val name = str(req, "entity")
+        // dropping retires the snapshot, which unpersists what
+        // CacheEntity/CacheIndex pinned
         Entity.open(spark, base, name).drop()
         schemas.remove(name)
-        // release any frames CacheEntity/CacheIndex pinned for it — a
-        // dropped entity must not keep blocks resident
-        (cachedFrames.remove(s"entity:$name").toSeq ++
-          cachedFrames.keys.filter(_.startsWith(s"index:$name/")).toSeq
-            .flatMap(cachedFrames.remove))
-          .foreach(df => scala.util.Try(df.unpersist()))
         ackOf(ok = true)
       } catch { case e: Exception => ackOf(ok = false, e.getMessage) }
     }
@@ -318,16 +313,16 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
 
     u("GetEntityProperties", "EntityPropertiesMessage", "PropertiesMessage") { req =>
       try {
-        val e = Entity.open(spark, base, str(req, "entity"))
-        val (version, inserts) = e.stamp
+        val s = Entity.open(spark, base, str(req, "entity")).snapshot
+        val (version, inserts) = s.stamp
         propertiesMsg(ok = true, "", Seq(
-          "count" -> e.count().toString,
+          "count" -> s.count.toString,
           "version" -> version.toString,
           "inserts" -> inserts.toString,
-          "schema" -> e.read().drop("ap_id").schema.fields
+          "schema" -> s.frame.drop("ap_id").schema.fields
             .map(f => s"${f.name}:${ProtoImportExport.typeNameOf(f.dataType)}")
             .mkString(","),
-          "indexes" -> e.listIndexes.sorted.mkString(",")))
+          "indexes" -> s.listIndexes.sorted.mkString(",")))
       } catch { case e: Exception => propertiesMsg(ok = false, e.getMessage, Nil) }
     }
 
@@ -471,11 +466,11 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
         // bigger-is-better score like the kNN side; untrained paths
         // (MaxValue prediction) report score 0. Introspection must stay
         // metadata-cheap: untrained predictions ignore n entirely (skip
-        // the count), and a trained lookup uses the stamp-memoized
+        // the count), and a trained lookup uses the snapshot's footer
         // count, never a fresh corpus scan per RPC
         val dedupN =
           if (graft.plans.DedupPlanner.measurementCount == 0) 0L
-          else e.cachedCount()
+          else e.count()
         val dedup = graft.plans.DedupPlanner.scoredPaths(dedupN)
           .map { case (p, nanos) =>
             p -> (if (nanos == Double.MaxValue) 0.0 else 1e9 / (1e9 + nanos)) }
@@ -586,8 +581,6 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
         val entityName = str(req, "entity")
         val index = str(req, "index")
         Entity.open(spark, base, entityName).dropIndex(index)
-        cachedFrames.remove(s"index:$entityName/$index")
-          .foreach(df => scala.util.Try(df.unpersist()))
         ackOf(ok = true)
       } catch { case e: Exception => ackOf(ok = false, e.getMessage) }
     }
@@ -601,8 +594,6 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
         val index = str(req, "index")
         val e = Entity.open(spark, base, entityName)
         graft.api.IndexOps.refresh(e, index)
-        cachedFrames.remove(s"index:$entityName/$index")
-          .foreach(df => scala.util.Try(df.unpersist()))
         ackOf(ok = true, index)
       } catch { case e: Exception => ackOf(ok = false, e.getMessage) }
     }
@@ -704,8 +695,9 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
                             obs: StreamObserver[DynamicMessage]): Unit = {
           import scala.concurrent.ExecutionContext.Implicits.global
           val queryid = try str(req, "queryid") catch { case _: Exception => "" }
-          try {
+          try Entity.leasing {
             val entity = Entity.open(spark, base, str(sub(req, "from"), "entity"))
+            val snap = entity.snapshot
             val qd = req.getDescriptorForType
             require(req.hasField(qd.findFieldByName("nnq")),
               "nearest neighbour query necessary for parallel query")
@@ -717,9 +709,8 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
             // racing plan's FINAL rows honor it (index candidates from
             // other partitions drop in the rerank semi-join)
             val specs = graft.api.QueryOps.planSpecsFor(
-              restrictPartitions(entity, entity.read(),
-                nnqPartitions(sub(req, "nnq"))),
-              Entity.ApId, entity.freshIndexes, nnq, hints)
+              restrictPartitions(entity, snap.frame, nnqPartitions(sub(req, "nnq"))),
+              Entity.ApId, snap.freshIndexes, nnq, hints)
             val prefix = if (queryid.isEmpty) "graft-" else s"graft-$queryid-"
             if (queryid.nonEmpty) running.put(queryid, () =>
               specs.foreach(p =>
@@ -784,26 +775,21 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
     }
     u("Ping", "EmptyMessage", "AckMessage")(_ => ackOf(ok = true))
 
+    // both pin into the current snapshot, which unpersists them once a
+    // mutation retires it
     u("CacheEntity", "EntityNameMessage", "AckMessage") { req =>
       try {
         val name = str(req, "entity")
-        cachedFrames.getOrElseUpdate(s"entity:$name", {
-          val df = Entity.open(spark, base, name).read().persist()
-          df.count() // materialize now — that is what the cache call means
-          df
-        })
+        val s = Entity.open(spark, base, name).snapshot
+        s.pin(s.frame)
         ackOf(ok = true, name)
       } catch { case e: Exception => ackOf(ok = false, e.getMessage) }
     }
     u("CacheIndex", "IndexNameMessage", "AckMessage") { req =>
       try {
         val entityName = str(req, "entity")
-        val index = str(req, "index")
-        cachedFrames.getOrElseUpdate(s"index:$entityName/$index", {
-          val df = Entity.open(spark, base, entityName).indexData(index).persist()
-          df.count()
-          df
-        })
+        val e = Entity.open(spark, base, entityName)
+        e.snapshot.pin(e.indexData(str(req, "index")))
         ackOf(ok = true, entityName) // reference echoes the entity name
       } catch { case e: Exception => ackOf(ok = false, e.getMessage) }
     }
@@ -889,7 +875,10 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
       .asInstanceOf[Descriptors.EnumValueDescriptor].getName == "OK"
   }
 
-  private def runQuery(req: DynamicMessage): DynamicMessage = {
+  /** One query, holding the snapshots it reads leased until its result
+    * message is built — also for the batch and streaming calls, which
+    * run queries on other threads. */
+  private def runQuery(req: DynamicMessage): DynamicMessage = Entity.leasing {
     val queryid = try str(req, "queryid") catch { case _: Exception => "" }
     // per-query job group: a non-empty queryid makes this call
     // cancellable via StopQuery (reference cancels by job id,
@@ -925,9 +914,9 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
             !req.hasField(qd.findFieldByName("bq"))) {
           import scala.concurrent.ExecutionContext.Implicits.global
           val entity = Entity.open(spark, base, str(fromMsg, "entity"))
-          val df = restrictPartitions(entity, entity.read(),
-            nnqPartitions(sub(req, "nnq")))
-          val o = QueryOps.timedParallel(spark, df, Entity.ApId, entity.freshIndexes,
+          val snap = entity.snapshot
+          val df = restrictPartitions(entity, snap.frame, nnqPartitions(sub(req, "nnq")))
+          val o = QueryOps.timedParallel(spark, df, Entity.ApId, snap.freshIndexes,
             parseNnq(sub(req, "nnq")), timeLimitMs,
             graft.plans.Planner.hintsByName(strs(req, "hints")))
           return (o.result match {
@@ -997,11 +986,11 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
     }
 
     val entity = Entity.open(spark, base, str(fromMsg, "entity"))
+    val snap = entity.snapshot
     val nnqMsg =
       if (req.hasField(qd.findFieldByName("nnq"))) Some(sub(req, "nnq")) else None
     // partition-restricted scan (reference RankingQuery.partitions)
-    val df = nnqMsg.fold(entity.read())(m =>
-      restrictPartitions(entity, entity.read(), nnqPartitions(m)))
+    val df = nnqMsg.fold(snap.frame)(m => restrictPartitions(entity, snap.frame, nnqPartitions(m)))
     val preds =
       if (req.hasField(qd.findFieldByName("bq"))) wherePredicates(sub(req, "bq"), "where")
       else Nil
@@ -1010,7 +999,7 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
     else {
       // hints (reference HintBasedScanExpression): one naming a saved
       // index routes through it, the rest walk the planner
-      val routed = QueryOps.route(entity, df, Entity.ApId, nnqMsg.map(parseNnq), preds,
+      val routed = QueryOps.route(snap, df, Entity.ApId, nnqMsg.map(parseNnq), preds,
         strs(req, "hints"), index = None)
       // this door refuses a stale index; the HTTP door serves it flagged
       require(!routed.stale, s"${routed.source}: index is stale")

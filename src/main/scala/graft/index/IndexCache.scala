@@ -22,7 +22,11 @@ object IndexCache {
   // would run TWO IndexStore.save calls against the same persisted
   // path — the builder must run at most once per (dir, key)
   private val cache = new OnceMemo[(String, String), VectorIndex]
-  private lazy val tmpBase = Files.createTempDirectory("graft-idxcache").toString
+  private lazy val tmpBase = {
+    val p = Files.createTempDirectory("graft-idxcache")
+    Runtime.getRuntime.addShutdownHook(new Thread(() => graft.core.Entity.deleteRecursively(p)))
+    p.toString
+  }
 
   /** Collision-free per-data-dir tag (String.hashCode is 32-bit; a
     * collision would silently serve one dir's persisted indexes for

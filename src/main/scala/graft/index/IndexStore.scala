@@ -14,7 +14,8 @@ import org.apache.spark.sql.SparkSession
   * DataFrame as parquet (the only O(n) state — `(id, cells|codes|sig|...)`);
   * `meta.bin` holds the driver-side metadata (marks, codebooks,
   * projections, centroids — all O(KB..MB)) plus the entity version stamp
-  * the index was built at. A reloaded index scans straight from parquet:
+  * the index was built at; `schema.json` the narrow table's schema, so a
+  * load reads it without a schema-discovery job. A reloaded index scans straight from parquet:
   * no training, no encode pass — the build cost is paid once at create
   * time, which is what makes repeated kNN queries cheap at any scale.
   *
@@ -80,6 +81,7 @@ object IndexStore {
       catch { case e: Throwable => Files.move(old, dataDir); throw e }
       graft.core.Entity.deleteRecursively(old)
     } else Files.move(tmp, dataDir)
+    Files.writeString(dir.resolve("schema.json"), df.schema.json)
     val out = new ObjectOutputStream(Files.newOutputStream(dir.resolve("meta.bin")))
     try out.writeObject(SavedMeta(idx.indexType, idx.idCol, stamp,
       blob.asInstanceOf[Serializable]))
@@ -138,8 +140,7 @@ object IndexStore {
         Class.forName(desc.getName, false, Thread.currentThread.getContextClassLoader)
     }
     val meta = try in.readObject().asInstanceOf[SavedMeta] finally in.close()
-    recoverData(dir)
-    val df = spark.read.parquet(dir.resolve("data").toString)
+    val df = readData(spark, dir)
     val idx: VectorIndex = (meta.indexType, meta.blob) match {
       case ("vaf" | "vav" | "vap", b) =>
         val (marks, p, typ, rotate) = b.asInstanceOf[
@@ -200,6 +201,27 @@ object IndexStore {
   def exists(baseDir: String, name: String): Boolean =
     Files.exists(indexDir(baseDir, name).resolve("meta.bin"))
 
+  /** When the index was last saved — what tells a loaded copy from the
+    * one on disk. */
+  def savedAt(baseDir: String, name: String): java.nio.file.attribute.FileTime = {
+    val p = indexDir(baseDir, name).resolve("meta.bin")
+    require(Files.exists(p), s"no such index: $name")
+    Files.getLastModifiedTime(p)
+  }
+
+  /** The narrow table, read with its recorded schema (inferred for
+    * artifacts saved before schemas were recorded); heals a half-finished
+    * swap first. */
+  private def readData(spark: SparkSession, dir: Path): org.apache.spark.sql.DataFrame = {
+    recoverData(dir)
+    val data = dir.resolve("data").toString
+    val schema = dir.resolve("schema.json")
+    if (Files.exists(schema))
+      spark.read.schema(org.apache.spark.sql.types.DataType.fromJson(Files.readString(schema))
+        .asInstanceOf[org.apache.spark.sql.types.StructType]).parquet(data)
+    else spark.read.parquet(data)
+  }
+
   def list(baseDir: String): Seq[String] = {
     import scala.jdk.CollectionConverters._
     val b = Paths.get(baseDir)
@@ -220,8 +242,7 @@ object IndexStore {
                 name: String): org.apache.spark.sql.DataFrame = {
     val dir = indexDir(baseDir, name)
     require(Files.exists(dir.resolve("meta.bin")), s"no such index: $name")
-    recoverData(dir)
-    spark.read.parquet(dir.resolve("data").toString)
+    readData(spark, dir)
   }
 
   /** Heal a half-finished [[repartitionData]] swap: a hard kill between
@@ -245,8 +266,7 @@ object IndexStore {
                       name: String, mode: graft.core.Partitioning.Mode): Unit = {
     val dir = indexDir(baseDir, name)
     require(Files.exists(dir.resolve("meta.bin")), s"no such index: $name")
-    recoverData(dir) // heal a half-finished previous swap first
-    val df = spark.read.parquet(dir.resolve("data").toString)
+    val df = readData(spark, dir) // heals a half-finished previous swap first
     val tmp = dir.resolve("data_tmp")
     graft.core.Partitioning.repartition(df, mode)
       .write.mode("overwrite").parquet(tmp.toString)

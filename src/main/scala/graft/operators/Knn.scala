@@ -49,9 +49,10 @@ object Knn {
     * candidates-then-rerank shape every approximate index scan is wrapped in
     * (`IndexScanExpression.rewrite`, `IndexScanExpression.scala:89-98`).
     * The candidate set flows as a left-semi join (never a collected id list),
-    * so it stays distributed at any candidate cardinality. */
+    * so it stays distributed at any candidate cardinality; the join is
+    * set-semantic, so duplicate candidate ids need no `distinct`. */
   def rerank(entity: DataFrame, candidates: DataFrame, idCol: String,
              dist: Column, k: Int): DataFrame =
-    knn(entity.join(candidates.select(idCol).distinct(), Seq(idCol), "left_semi"),
+    knn(entity.join(candidates.select(idCol), Seq(idCol), "left_semi"),
       dist, k, col(idCol))
 }

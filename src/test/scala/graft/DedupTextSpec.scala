@@ -222,7 +222,7 @@ class DedupTextSpec extends SparkSpec {
   }
 
   test("corpus index persists to disk and serves admission after reload") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-corpusidx").toString
+    val dir = SharedSpark.tempDir("graft-corpusidx").toString
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog again and again today"))
       .toDF("doc_id", "text")

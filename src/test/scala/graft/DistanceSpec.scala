@@ -192,7 +192,7 @@ class DistanceSpec extends SparkSpec {
 
   test("sparse kernel over a sparsified float entity column (no densify)") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft-sparsedist").toString
+    val base = SharedSpark.tempDir("graft-sparsedist").toString
     val e = graft.core.Entity.create(spark, base, "v")
     e.insert(Seq((1L, Seq(1.0f, 0.0f, 3.0f)), (2L, Seq(0.0f, 2.0f, 0.0f)))
       .toDF("id", "vec"))

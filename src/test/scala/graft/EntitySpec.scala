@@ -12,7 +12,7 @@ class EntitySpec extends SparkSpec {
   import spark.implicits._
 
   private def freshBase(): String =
-    Files.createTempDirectory("graft-entity").toString
+    SharedSpark.tempDir("graft-entity").toString
 
   test("create / insert / read-back round trip with ap_id assignment") {
     val base = freshBase()
@@ -637,14 +637,14 @@ class EntitySpec extends SparkSpec {
 
   test("import csv into entity and export parquet") {
     val base = freshBase()
-    val csvDir = Files.createTempDirectory("graft-csv")
+    val csvDir = SharedSpark.tempDir("graft-csv")
     Files.write(csvDir.resolve("in.csv"), "k,v\n1,x\n2,y\n".getBytes)
     val df = ImportExport.importTable(spark, "csv", csvDir.toString,
       Map("header" -> "true", "inferSchema" -> "true"))
     val e = Entity.create(spark, base, "imported")
     ImportExport.importInto(e, df)
     e.count() shouldBe 2
-    val out = Files.createTempDirectory("graft-out").toString + "/exp"
+    val out = SharedSpark.tempDir("graft-out").toString + "/exp"
     ImportExport.export(e.read(), "parquet", out)
     spark.read.parquet(out).count() shouldBe 2
     e.drop()

@@ -33,7 +33,7 @@ class EventTimestampSpec extends SparkSpec {
     }.toDF("event_id", "ts_us", "user_id", "event_type", "value", "props")
 
     def writeDir(f: DataFrame => DataFrame): String = {
-      val dir = Files.createTempDirectory("graft-evts").toString
+      val dir = SharedSpark.tempDir("graft-evts").toString
       f(rows).select("event_id", "ts", "user_id", "event_type", "value", "props")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
       dir

@@ -19,7 +19,7 @@ import graft.grpc.{GraftGrpcServer, Proto}
   * for the battery, one TCP/netty round trip for the socket path). */
 class GrpcSpec extends SparkSpec {
 
-  private lazy val base = Files.createTempDirectory("graft-grpc").toString
+  private lazy val base = SharedSpark.tempDir("graft-grpc").toString
   private lazy val server = new GraftGrpcServer(spark, base)
   private lazy val inproc = {
     val s = server.startInProcess("graft-grpc-spec")
@@ -846,7 +846,7 @@ class GrpcSpec extends SparkSpec {
     call(mdDef("Insert", "InsertMessage", "AckMessage"),
       insertMsg("rpcexp", (0 until 10).map(i => tuple(s"e$i", Seq(i.toFloat, 2f * i)))))
 
-    val expDir = Files.createTempDirectory("graft-protoexp").toString
+    val expDir = SharedSpark.tempDir("graft-protoexp").toString
     val pe = Proto.msg("ProtoExportMessage")
     val exported = call(mdDef("ProtoExportData", "ProtoExportMessage", "AckMessage"),
       Proto.newMsg("ProtoExportMessage")

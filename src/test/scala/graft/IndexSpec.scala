@@ -263,7 +263,7 @@ class IndexSpec extends SparkSpec {
   }
 
   test("index persistence: every family round-trips through IndexStore") {
-    val base = java.nio.file.Files.createTempDirectory("graft-idxstore").toString
+    val base = SharedSpark.tempDir("graft-idxstore").toString
     val family: Seq[(String, VectorIndex)] = Seq(
       "vaf" -> VAIndex.buildFixed(data, "tid", "vectorfield", p = 2.0),
       "vap" -> VAIndex.buildPlus(data, "tid", "vectorfield"),

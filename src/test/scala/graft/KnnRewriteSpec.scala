@@ -32,7 +32,7 @@ class KnnRewriteSpec extends SparkSpec {
 
     // persist + reload: the stored index's narrow table is parquet-backed,
     // so the grafted candidate sub-plan shares no relation with the query
-    val store = Files.createTempDirectory("graft-rw").toString
+    val store = SharedSpark.tempDir("graft-rw").toString
     IndexStore.save(store, "vaf",
       VAIndex.buildFixed(Tables.embeddings(spark, sfDir), "vec_id", "embedding", p = 2.0))
     val idx = IndexStore.load(spark, store, "vaf").index
@@ -47,7 +47,7 @@ class KnnRewriteSpec extends SparkSpec {
 
   test("non-conforming distance is left untouched") {
     KnnIndexRewrite.clear()
-    val store = Files.createTempDirectory("graft-rw2").toString
+    val store = SharedSpark.tempDir("graft-rw2").toString
     IndexStore.save(store, "vaf",
       VAIndex.buildFixed(Tables.embeddings(spark, sfDir), "vec_id", "embedding", p = 2.0))
     KnnIndexRewrite.register(spark, embPath, "vec_id", "embedding",

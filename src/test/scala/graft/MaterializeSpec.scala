@@ -26,7 +26,7 @@ class MaterializeSpec extends SparkSpec {
   }
 
   test("with a checkpoint dir: RELIABLE checkpoint files land in it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = SharedSpark.tempDir("graft-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     try {
       val m = Materialize(df)

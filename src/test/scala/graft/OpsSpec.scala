@@ -20,7 +20,7 @@ class OpsSpec extends SparkSpec {
   private def nnq = NnQuery("feature", q, "euclidean", 10)
 
   test("entity ops: create→insert→count→preview→drop") {
-    val base = Files.createTempDirectory("graft-ops").toString
+    val base = SharedSpark.tempDir("graft-ops").toString
     val e = EntityOps.create(spark, base, "ops_e")
     EntityOps.insert(e, data.limit(50))
     EntityOps.count(e) shouldBe 50
@@ -55,7 +55,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("sequential kNN over a sparsified entity matches the dense result") {
-    val base = Files.createTempDirectory("graft-ops-sparse").toString
+    val base = SharedSpark.tempDir("graft-ops-sparse").toString
     val denseTop = QueryOps.sequential(data, "id", nnq)
       .select("id").collect().map(_.getLong(0)).toSeq
     val e = EntityOps.create(spark, base, "spq")

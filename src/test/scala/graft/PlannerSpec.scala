@@ -289,7 +289,7 @@ class PlannerSpec extends SparkSpec {
   }
 
   test("ecp partitioning writes cluster dirs and partition-skip prunes input files") {
-    val out = Files.createTempDirectory("graft-part").toString + "/tbl"
+    val out = SharedSpark.tempDir("graft-part").toString + "/tbl"
     val centroids = Partitioning.write(data, Partitioning.Ecp("feature", 8), out)
     val table = spark.read.parquet(out)
     val pruned = Partitioning.partitionSkipRead(table, centroids, q, keep = 2)
@@ -305,7 +305,7 @@ class PlannerSpec extends SparkSpec {
     // driver query: the pruned read must be EXACTLY the label-subset and
     // must reach the scan as partition pruning, not a post-scan filter.
     val emb = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.01")
-    val out = Files.createTempDirectory("graft-bycol").toString + "/embp"
+    val out = SharedSpark.tempDir("graft-bycol").toString + "/embp"
     Partitioning.write(emb, Partitioning.ByColumn("label"), out)
     val table = spark.read.parquet(out)
     val pruned = Partitioning.partitionSkipKeys(table, Seq(0, 1, 2))

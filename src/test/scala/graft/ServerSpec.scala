@@ -14,7 +14,7 @@ import graft.api.Server
   * protocol (the reference's gRPC DataDefinition/DataQuery surface). */
 class ServerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
-  private lazy val base = Files.createTempDirectory("graft-srv").toString
+  private lazy val base = SharedSpark.tempDir("graft-srv").toString
   private lazy val server = Server.start(spark, base)
   private lazy val client = HttpClient.newHttpClient()
   private val mapper = new ObjectMapper()
@@ -1031,7 +1031,7 @@ class ServerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     k.get("rows").size() shouldBe 4
 
     // export logical rows, import them as a new entity
-    val dir = Files.createTempDirectory("graft-exp").toString
+    val dir = SharedSpark.tempDir("graft-exp").toString
     post("/export", s"""{"name":"demofill","format":"json","path":"$dir/out"}""")
       .get("ok").asBoolean() shouldBe true
     post("/import", s"""{"name":"demoimp","format":"json","path":"$dir/out"}""")

@@ -21,7 +21,7 @@ import graft.grpc.{GraftClient, GraftGrpcServer}
   * router and one set of decoders. */
 class ServingCoreSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
-  private lazy val base = Files.createTempDirectory("graft-core").toString
+  private lazy val base = SharedSpark.tempDir("graft-core").toString
   private lazy val http = Server.start(spark, base)
   private lazy val grpc = new GraftGrpcServer(spark, base).startNetty(0)
   private lazy val client = GraftClient.connect("localhost", grpc.getPort)

@@ -20,7 +20,7 @@ import graft.api.Server
   * this proves the SERVER stays healthy when the battery never ends. */
 class SoakSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
-  private lazy val base = Files.createTempDirectory("graft-soak").toString
+  private lazy val base = SharedSpark.tempDir("graft-soak").toString
   private lazy val server = Server.start(spark, base)
   private lazy val client = HttpClient.newHttpClient()
   private val mapper = new ObjectMapper()

@@ -16,7 +16,7 @@ class StorageHandlerSpec extends SparkSpec {
   test("parquet/orc/json/csv handlers round-trip") {
     for (name <- Seq("parquet", "orc", "json", "csv")) {
       val h = StorageHandlers(name)
-      val store = Files.createTempDirectory(s"graft-$name").toString + "/t"
+      val store = SharedSpark.tempDir(s"graft-$name").toString + "/t"
       h.exists(spark, store) shouldBe false
       h.write(spark, store, df, overwrite = true)
       h.exists(spark, store) shouldBe true
@@ -29,7 +29,7 @@ class StorageHandlerSpec extends SparkSpec {
 
   test("key-value handler: point lookups prune buckets; full read hides the bucket column") {
     val h = StorageHandlers.keyValue("k", nBuckets = 8)
-    val store = Files.createTempDirectory("graft-kv-spec").toString + "/t"
+    val store = SharedSpark.tempDir("graft-kv-spec").toString + "/t"
     val data = (0L until 100L).map(i => (i, s"v$i", i * 0.5)).toDF("k", "s", "x")
     h.write(spark, store, data, overwrite = true)
 
@@ -60,7 +60,7 @@ class StorageHandlerSpec extends SparkSpec {
 
   test("compound handler: columnar scans + bucket-pruned point lookups over the same rows") {
     val h = StorageHandlers.compound("k", nBuckets = 8)
-    val store = Files.createTempDirectory("graft-comp-spec").toString + "/t"
+    val store = SharedSpark.tempDir("graft-comp-spec").toString + "/t"
     val data = (0L until 100L).map(i => (i, s"v$i", i * 0.5)).toDF("k", "s", "x")
     h.exists(spark, store) shouldBe false
     h.write(spark, store, data, overwrite = true)
@@ -90,7 +90,7 @@ class StorageHandlerSpec extends SparkSpec {
 
   test("predicates are applied (and pushed) on handler reads") {
     val h = StorageHandlers("parquet")
-    val store = Files.createTempDirectory("graft-pred").toString + "/t"
+    val store = SharedSpark.tempDir("graft-pred").toString + "/t"
     h.write(spark, store, df, overwrite = true)
     val got = h.read(spark, store, Seq(col("x") > 2.0))
     got.collect().map(_.getLong(0)).toSeq shouldBe Seq(2L)
@@ -98,8 +98,8 @@ class StorageHandlerSpec extends SparkSpec {
   }
 
   test("transfer moves data between engines") {
-    val from = Files.createTempDirectory("graft-from").toString + "/t"
-    val to = Files.createTempDirectory("graft-to").toString + "/t"
+    val from = SharedSpark.tempDir("graft-from").toString + "/t"
+    val to = SharedSpark.tempDir("graft-to").toString + "/t"
     StorageHandlers("parquet").write(spark, from, df, overwrite = true)
     StorageHandlers.transfer(spark, StorageHandlers("parquet"), from,
       StorageHandlers("json"), to)
@@ -120,7 +120,7 @@ class StorageHandlerSpec extends SparkSpec {
       (4L, "vector vector vector hash"),
       (5L, "plain prose about nothing")
     ).toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("graft-fts").toString + "/idx"
+    val dir = SharedSpark.tempDir("graft-fts").toString + "/idx"
     FullTextStore.exists(dir) shouldBe false
     FullTextStore.write(spark, dir, docs, "doc_id", "text", nBuckets = 16)
     FullTextStore.exists(dir) shouldBe true
@@ -167,7 +167,7 @@ class StorageHandlerSpec extends SparkSpec {
 
     // an EMPTY corpus still stores and serves (typed empty relations,
     // no parquet schema-inference failure)
-    val emptyDir = Files.createTempDirectory("graft-fts-e").toString + "/idx"
+    val emptyDir = SharedSpark.tempDir("graft-fts-e").toString + "/idx"
     FullTextStore.write(spark, emptyDir, docs.limit(0), "doc_id", "text")
     FullTextStore.matchAll(spark, emptyDir, Seq("vector")).collect() shouldBe empty
     FullTextStore.bm25TopK(spark, emptyDir, Seq("vector"), 5).collect() shouldBe empty
@@ -189,7 +189,7 @@ class StorageHandlerSpec extends SparkSpec {
       val texts = sample(Gen.listOfN(10, doc), seed)
       val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text")
-      val dir = Files.createTempDirectory("graft-fts-p").toString + "/idx"
+      val dir = SharedSpark.tempDir("graft-fts-p").toString + "/idx"
       FullTextStore.write(spark, dir, docs, "doc_id", "text", nBuckets = 8)
       val terms = sample(Gen.pick(2, vocab), seed + 100).toSeq
       withClue(s"seed $seed terms $terms: ") {
@@ -211,7 +211,7 @@ class StorageHandlerSpec extends SparkSpec {
   }
 
   test("jdbc handler round-trips against embedded Derby with pushdown") {
-    val dbDir = Files.createTempDirectory("graft-derby").toString + "/db"
+    val dbDir = SharedSpark.tempDir("graft-derby").toString + "/db"
     System.setProperty("derby.stream.error.file", "/dev/null")
     val h = new graft.sources.JdbcHandler("jdbc", s"jdbc:derby:$dbDir;create=true")
     h.exists(spark, "tbl") shouldBe false
@@ -228,7 +228,7 @@ class StorageHandlerSpec extends SparkSpec {
     got.collect().map(_.getLong(0)).toSeq shouldBe Seq(2L)
     got.queryExecution.executedPlan.toString should include("PushedFilters: [")
     // transfer from a file engine into the database
-    val from = Files.createTempDirectory("graft-j-from").toString + "/t"
+    val from = SharedSpark.tempDir("graft-j-from").toString + "/t"
     StorageHandlers("parquet").write(spark, from, df, overwrite = true)
     StorageHandlers.transfer(spark, StorageHandlers("parquet"), from, h, "tbl2")
     h.read(spark, "tbl2").count() shouldBe 2

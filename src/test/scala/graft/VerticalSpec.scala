@@ -22,7 +22,7 @@ class VerticalSpec extends SparkSpec {
     Vertical.Group("money", Seq("price"), StorageHandlers("orc")))
 
   test("write groups through different handlers and reassemble by pk join") {
-    val base = Files.createTempDirectory("graft-vert").toString
+    val base = SharedSpark.tempDir("graft-vert").toString
     Vertical.write(df, "pk", groups, base, numPartitions = 4)
     val back = Vertical.read(spark, "pk", groups, base)
     back.count() shouldBe 100
@@ -31,7 +31,7 @@ class VerticalSpec extends SparkSpec {
   }
 
   test("attribute-pruned read never opens unneeded groups") {
-    val base = Files.createTempDirectory("graft-vert2").toString
+    val base = SharedSpark.tempDir("graft-vert2").toString
     Vertical.write(df, "pk", groups, base)
     // destroy the money group: a pruned read of meta attrs must not touch it
     StorageHandlers("orc").drop(spark, s"$base/group_money")
@@ -43,9 +43,9 @@ class VerticalSpec extends SparkSpec {
   test("double assignment and pk-in-group are rejected") {
     val bad = Seq(Vertical.Group("a", Seq("nm")), Vertical.Group("b", Seq("nm")))
     an[IllegalArgumentException] should be thrownBy
-      Vertical.write(df, "pk", bad, Files.createTempDirectory("x").toString)
+      Vertical.write(df, "pk", bad, SharedSpark.tempDir("x").toString)
     an[IllegalArgumentException] should be thrownBy
       Vertical.write(df, "pk", Seq(Vertical.Group("a", Seq("pk", "nm"))),
-        Files.createTempDirectory("y").toString)
+        SharedSpark.tempDir("y").toString)
   }
 }
