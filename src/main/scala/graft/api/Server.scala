@@ -178,8 +178,9 @@ class Server private(spark: SparkSession, base: String, http: HttpServer,
     // the browser console (reference web UI role): one static page over
     // the same JSON endpoints external clients POST to
     case "/" | "/ui" => serveUi(ex)
-    // the two streaming endpoints manage the exchange themselves
-    case "/entity/insert/stream" => Entity.leasing(handleStreamInsert(ex))
+    // the two streaming endpoints manage the exchange themselves; the
+    // insert stream returns no rows, so it holds no lease
+    case "/entity/insert/stream" => handleStreamInsert(ex)
     case "/query/progressive" => Entity.leasing(handleProgressive(ex))
     case path =>
       // the snapshots the request reads stay leased until its response is

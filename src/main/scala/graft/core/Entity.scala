@@ -34,15 +34,18 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Isolation is by lease. A snapshot holds a lease on its version
   * directory while it is the current one, and [[Entity.leasing]] holds
   * the lease of every snapshot its block reads until the block returns —
-  * both front doors run each request inside one, until its response is
-  * encoded. A swap deletes a superseded version only once its last
-  * lease is released, so a leased frame still collects the old rows
-  * after a vacuum; unleased versions older than [[retainVersions]] are
-  * swept at every swap, crash leftovers included. A frame read outside
-  * a lease may lose its files to the next mutation's swap. Leases are
-  * per JVM: a second process mutating the same base moves the stamp, so
-  * this process's next read sees its change, but that process is not
-  * held back by this one's leases.
+  * both front doors run each request that reads rows inside one, until
+  * its response is encoded. A swap deletes a superseded version only
+  * once its last lease is released, so a leased frame still collects the
+  * old rows after a vacuum; unleased versions older than
+  * [[retainVersions]] are swept at every swap, crash leftovers included.
+  * A frame read outside a lease may lose its files to the next
+  * mutation's swap. Leases are
+  * per JVM: a second process mutating the same base moves the stamp (or,
+  * by dropping and re-creating the entity, the incarnation id drawn at
+  * [[Entity.create]]), so this process's next read sees its change, but
+  * that process is not held back by this one's leases. Reads inside a
+  * mutation block take no lease: the block's lock covers them.
   *
   * `ap_id` layout: `insertCount (15 bits) | monotonically_increasing_id
   * (48 bits)` — unique for ≤32k insert batches × ≤32k partitions ×
@@ -98,12 +101,15 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
   /** The snapshot of the current [[stamp]]: built by the first read after
     * the stamp moves, then shared until it moves again or a mutation
     * block ends. Inside [[Entity.leasing]] it stays leased — its version
-    * directory kept — until the block returns. */
+    * directory kept — until the block returns, unless it is taken inside
+    * a mutation block ([[exclusively]]): that block's lock covers its own
+    * reads, and a long [[Entity.leasing]] around many inserts would
+    * otherwise keep every version their auto-vacuums supersede. */
   def snapshot: Snapshot = {
     val s = acquire()
     Entity.held.get match {
-      case null => s.release()
-      case held => held += s
+      case held if held != null && !Thread.holdsLock(shared.mutation) => held += s
+      case _ => s.release()
     }
     s
   }
@@ -115,14 +121,15 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
     val sh = shared
     val (m, cached, ticket) = sh.synchronized {
       val m = meta
-      Option(sh.current).filter(c => c.stamp == stampOf(m) && (c.frame.sparkSession eq spark)) match {
+      Option(sh.current).filter(c => c.id == m.id && c.stamp == stampOf(m) &&
+          (c.frame.sparkSession eq spark)) match {
         case Some(c) => c.retain(); (m, Some(c), 0L)
         case None => sh.lease(m.version); (m, None, sh.ticket())
       }
     }
     cached.getOrElse {
       val groups = attributeGroups
-      val s = try new Snapshot(sh, dir.toString, stampOf(m), m.version, frameOf(m, groups),
+      val s = try new Snapshot(sh, dir.toString, m.id, stampOf(m), m.version, frameOf(m, groups),
         footerCount = groups.isEmpty, ticket)
       catch { case e: Throwable => sh.synchronized(sh.unlease(m.version)); throw e }
       if (!m.pending) sh.synchronized(sh.install(s))
@@ -352,7 +359,10 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
       (if (layout.isDefined) w.partitionBy(Partitioning.PartitionCol) else w)
         .parquet(dataPath(m.version).toString)
       // every store write landed: clear the pending marker — the stamp
-      // becomes (v, batch) and index staleness comparisons are exact
+      // becomes (v, batch) and index staleness comparisons are exact. The
+      // recorded schema holds: a batch appends only when its partition
+      // column has the recorded type, and the directory names of values
+      // of that type read back as it
       writeMeta(metaPath, m.copy(insertCount = batch, pending = false))
       // layout entities can never compact below one file per partition
       // directory — scale the trigger with key cardinality or a
@@ -369,8 +379,19 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
           partFileCount(dataPath(m.version)) > effectiveCap) vacuum()
     } else { // schema drift (names OR types): align via union and rewrite once
       val next = m.version + 1
+      val stored = read()
+      // a layout's partition column reads typed from its directory names
+      // ('001' as int): when that differs from the batch's, take it from
+      // the key columns again, or the union would cast one side ('abc' to
+      // bigint) or rename directories ('001' to '1')
+      val pc = Partitioning.PartitionCol
+      val aligned =
+        if (stored.columns.contains(pc) && withId.columns.contains(pc) &&
+            stored.schema(pc).dataType != withId.schema(pc).dataType)
+          assignPartition(stored.drop(pc))
+        else stored
       val written = writeData(
-        read().unionByName(withId, allowMissingColumns = true), dataPath(next))
+        aligned.unionByName(withId, allowMissingColumns = true), dataPath(next))
       swap(m.copy(version = next, insertCount = batch, schema = Some(written)))
     }
     this
@@ -410,7 +431,7 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
       import scala.jdk.CollectionConverters._
       footerRows(spark, stream.iterator().asScala
         .filter(f => Files.isRegularFile(f) && f.getFileName.toString.endsWith(".parquet"))
-        .map(_.toUri.toString)).sum
+        .map(_.toUri)).sum
     } finally stream.close()
   }
 
@@ -726,12 +747,15 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
 object Entity {
   val ApId = "ap_id"
 
-  /** One version of an entity as readers see it, for one [[Entity.stamp]]:
-    * the read frame (its file list taken when it was built), the row
-    * count and the stored indexes, each loaded once. Shared by every
-    * handle this JVM opens on the entity while it is current; see the
-    * [[Entity]] scaladoc for its lifetime and leases. */
-  final class Snapshot private[Entity] (shared: Shared, dir: String, val stamp: (Int, Int),
+  /** One version of an entity as readers see it, for one [[Entity.stamp]]
+    * of one incarnation (`id`, drawn at create, so a dropped and
+    * re-created entity never matches the old one's stamps): the read
+    * frame (its file list taken when it was built), the row count and the
+    * stored indexes, each loaded once. Shared by every handle this JVM
+    * opens on the entity while it is current; see the [[Entity]]
+    * scaladoc for its lifetime and leases. */
+  final class Snapshot private[Entity] (shared: Shared, dir: String,
+                                        private[Entity] val id: String, val stamp: (Int, Int),
                                         version: Int, val frame: DataFrame,
                                         footerCount: Boolean, private[Entity] val ticket: Long) {
     /** References: the caller that built it, the current-snapshot slot,
@@ -747,7 +771,7 @@ object Entity {
       * no Spark job); a read joined with attribute groups counts by job. */
     lazy val count: Long =
       if (version == 0) 0L
-      else if (footerCount) shared.rows(frame.sparkSession, version, frame.inputFiles)
+      else if (footerCount) shared.rows(frame.sparkSession, (id, version), frame.inputFiles)
       else frame.count()
 
     def listIndexes: Seq[String] = graft.index.IndexStore.list(dir)
@@ -788,9 +812,9 @@ object Entity {
 
   /** Run `f` holding, until it returns, the lease of every snapshot it
     * reads on this thread ([[Entity.read]], [[Entity.snapshot]], counts and
-    * index loads): a superseded version they read stays on disk until
-    * then. The front doors run each request inside one. Nested blocks
-    * join the outermost. */
+    * index loads) outside a mutation block: a superseded version they
+    * read stays on disk until then. The front doors run each request that
+    * returns rows inside one. Nested blocks join the outermost. */
   def leasing[T](f: => T): T =
     if (held.get != null) f
     else {
@@ -817,15 +841,15 @@ object Entity {
     private var retiredUpTo = 0L
     /** Version → live snapshots over it. */
     private val leases = scala.collection.mutable.Map.empty[Int, Int]
-    /** Rows per part file of the last counted version: a version's files
-      * never change once written (appends add files), so a count after
-      * an append reads only the new files' footers. */
-    private var counted = (0, Map.empty[String, Long])
+    /** Rows per part file of the last counted (incarnation, version): a
+      * version's files never change once written (appends add files), so
+      * a count after an append reads only the new files' footers. */
+    private var counted = (("", 0), Map.empty[String, Long])
 
-    def rows(spark: SparkSession, version: Int, files: Seq[String]): Long = {
+    def rows(spark: SparkSession, version: (String, Int), files: Seq[String]): Long = {
       val known = synchronized(if (counted._1 == version) counted._2 else Map.empty[String, Long])
       val (seen, fresh) = files.partition(known.contains)
-      val now = seen.map(f => f -> known(f)).toMap ++ fresh.zip(footerRows(spark, fresh.iterator))
+      val now = seen.map(f => f -> known(f)).toMap ++ fresh.zip(footerRows(spark, fresh.iterator.map(new java.net.URI(_))))
       synchronized { counted = (version, now) }
       now.values.sum
     }
@@ -898,9 +922,11 @@ object Entity {
     } finally s.close()
   }
 
-  /** Rows of each parquet file (URI) from its footer — a driver-side
-    * metadata read, no Spark job. */
-  private def footerRows(spark: SparkSession, files: Iterator[String]): Iterator[Long] = {
+  /** Rows of each parquet file from its footer — a driver-side metadata
+    * read, no Spark job. Files are URIs, escaped as `inputFiles` and
+    * `Path.toUri` give them: a Hadoop path built from such a string would
+    * escape a `%20` again. */
+  private def footerRows(spark: SparkSession, files: Iterator[java.net.URI]): Iterator[Long] = {
     val conf = spark.sessionState.newHadoopConf()
     files.map { f =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -920,7 +946,7 @@ object Entity {
     * fresh afterwards. */
   private[core] case class Meta(name: String, version: Int, insertCount: Int,
                                 pending: Boolean = false, retain: Int = 1,
-                                schema: Option[StructType] = None)
+                                schema: Option[StructType] = None, id: String = "")
 
   /** Persisted directory-layout descriptor: `mode` ∈ {ecp, bycolumn},
     * `keyCol` = vector column (ecp) or partition key (bycolumn),
@@ -980,7 +1006,7 @@ object Entity {
   private def writeMeta(p: Path, m: Meta): Unit = {
     val root = jackson.createObjectNode()
     root.put("name", m.name).put("version", m.version).put("insertCount", m.insertCount)
-      .put("pending", m.pending).put("retain", m.retain)
+      .put("pending", m.pending).put("retain", m.retain).put("id", m.id)
     m.schema.foreach(s => root.set[JsonNode]("schema", jackson.readTree(s.json)))
     val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
     Files.write(tmp, jackson.writeValueAsBytes(root))
@@ -997,7 +1023,9 @@ object Entity {
       Option(root.get("retain")).map(_.asInt(1)).getOrElse(1),
       // absent in meta files written before schemas were recorded → the
       // read infers it
-      Option(root.get("schema")).map(n => DataType.fromJson(n.toString).asInstanceOf[StructType]))
+      Option(root.get("schema")).map(n => DataType.fromJson(n.toString).asInstanceOf[StructType]),
+      // absent in meta files written before incarnations were drawn → ""
+      Option(root.get("id")).map(_.asText("")).getOrElse(""))
   }
 
   /** Create a new empty entity. Reserved `ap_*` names are rejected for
@@ -1008,7 +1036,8 @@ object Entity {
     sharedOf(dir).mutation.synchronized {
       require(!Files.exists(dir), s"entity $name already exists")
       Files.createDirectories(dir)
-      writeMeta(dir.resolve("_meta.json"), Meta(name, 0, 0))
+      writeMeta(dir.resolve("_meta.json"),
+        Meta(name, 0, 0, id = java.util.UUID.randomUUID.toString))
     }
     new Entity(name, Paths.get(base), spark)
   }

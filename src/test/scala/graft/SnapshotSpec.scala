@@ -7,7 +7,7 @@ import java.nio.file.{Files, Path, Paths}
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -226,6 +226,94 @@ class SnapshotSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     s.frame.storageLevel.useMemory shouldBe false // retired with its snapshot
     val near = Some(GraftClient.Nnq("vec", Seq(100f, 0f), k = 1))
     client.query("pinned", near).get.head.rows.head("rid") shouldBe 100
+  }
+
+  test("count and deleteWhere read the footers under a base path that needs escaping") {
+    val odd = SharedSpark.tempDir("graft snapshot %20 ").toString
+    val e = Entity.create(spark, odd, "escaped")
+    e.insert(rows(0, 30))
+    e.insert(rows(30, 10))
+    Entity.open(spark, odd, "escaped").count() shouldBe 40
+    e.deleteWhere(col("rid") < 5) shouldBe 5
+    Entity.open(spark, odd, "escaped").count() shouldBe 35
+  }
+
+  test("inserts under a bycolumn layout record the partition type a read infers") {
+    import org.apache.spark.sql.functions._
+    def coded(from: Int, code: Column) = rows(from, 6).withColumn("code", code)
+    // keys that are all null type the partition column void; a key '001'
+    // makes a read infer int
+    val n = Entity.create(spark, base, "nullkeys")
+    n.insert(coded(0, lit(null).cast("string")))
+    n.partitionLayout(Partitioning.ByColumn("code"))
+    schemaHolds(n, "nullkeys", "bycolumn over null keys")
+    n.insert(coded(10, lit("001")))
+    schemaHolds(n, "nullkeys", "insert of a numeric-looking key")
+    n.read().count() shouldBe 12
+
+    // numeric-looking keys type it int; a key 'abc' makes it a string, and
+    // the stored rows keep their directories ('001', not '1')
+    val k = Entity.create(spark, base, "numkeys")
+    k.insert(coded(0, format_string("%03d", col("rid") % 2 + 1)))
+    k.partitionLayout(Partitioning.ByColumn("code"))
+    schemaHolds(k, "numkeys", "bycolumn over numeric-looking keys")
+    k.insert(coded(10, lit("abc")))
+    schemaHolds(k, "numkeys", "insert of a non-numeric key")
+    k.insert(coded(20, lit("003")))
+    schemaHolds(k, "numkeys", "append of a further key")
+    k.read().select(Partitioning.PartitionCol).distinct().collect().map(_.getString(0)).toSet shouldBe
+      Set("001", "002", "abc", "003")
+    k.readPrunedKeys(Seq("001")).count() shouldBe 3
+  }
+
+  test("a stream insert that crosses auto-vacuum frees the old version while it runs") {
+    val e = Entity.create(spark, base, "streamed")
+    e.insert(rows(0, 4).select("rid", "cat"))
+    val v0 = e.stamp._1
+    val conn = new java.net.URL(
+      s"http://127.0.0.1:${http.port}/entity/insert/stream?entity=streamed&batchSize=4")
+      .openConnection().asInstanceOf[java.net.HttpURLConnection]
+    conn.setDoOutput(true)
+    conn.setRequestMethod("POST")
+    conn.setChunkedStreamingMode(0)
+    val out = conn.getOutputStream
+    def send(from: Int, n: Int): Unit = {
+      (from until from + n).foreach(r => out.write(s"""{"rid":$r,"cat":${r % 4}}\n""".getBytes))
+      out.flush()
+    }
+    // a few rows per batch give a few part files per batch: 60 batches
+    // pass the 100-part-file auto-vacuum trigger
+    send(100, 240)
+    val deadline = System.nanoTime() + 120L * 1000000000L
+    while (!(e.stamp._1 > v0 && e.versions.size == 1) && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    withClue(s"versions while the stream runs, at stamp ${e.stamp}: ") {
+      e.stamp._1 should be > v0
+      e.versions should have size 1
+    }
+    send(1000, 4)
+    out.close()
+    val reply = mapper.readTree(conn.getInputStream.readAllBytes())
+    withClue(reply.toString) { reply.get("ok").asBoolean() shouldBe true }
+    reply.get("inserted").asInt() shouldBe 244
+    Entity.open(spark, base, "streamed").count() shouldBe 248
+  }
+
+  test("a cached snapshot is not served after another process drops and re-creates the entity") {
+    val e = Entity.create(spark, base, "reborn")
+    e.insert(rows(0, 20))
+    e.count() shouldBe 20
+    val cachedStamp = e.stamp
+    // a second path to the same directory shares no state with this one,
+    // as a second process would not
+    val other = SharedSpark.tempDir("graft-snapshot-other").resolve("base")
+    Files.createSymbolicLink(other, Paths.get(base).toAbsolutePath)
+    Entity.open(spark, other.toString, "reborn").drop()
+    Entity.create(spark, other.toString, "reborn").insert(rows(100, 7))
+    e.stamp shouldBe cachedStamp
+    val reopened = Entity.open(spark, base, "reborn")
+    reopened.count() shouldBe 7
+    reopened.read().select("rid").collect().map(_.getInt(0)).sorted shouldBe (100 until 107)
   }
 
   test("the rerank semi-join takes candidate ids without a distinct aggregate") {
