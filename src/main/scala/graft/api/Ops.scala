@@ -36,9 +36,7 @@ object EntityOps {
 }
 
 object IndexOps {
-  /** Every type name [[create]] accepts — the wire layer keys stored
-    * index names as `<type>_<attribute>` and needs the exact list to
-    * parse them back. */
+  /** Every type name [[create]] accepts. */
   val knownTypes: Seq[String] =
     Seq("vaf", "vav", "vap", "ecp", "pq", "sh", "lsh", "mi", "ivfpq", "sq",
       "bsq", "opq", "nsw")
@@ -94,11 +92,11 @@ object IndexOps {
     idx
   }
 
-  /** The stored indexes over `attribute`, sorted. Exact
-    * `<type>_<attribute>` matches only — a bare suffix test would report
-    * doc_id's indexes for an attribute named `id`. */
+  /** The stored indexes built over `attribute`, stale ones included,
+    * sorted — by the same rule that scopes the planner's walk
+    * ([[IndexStore.Loaded.attribute]]). */
   def over(e: Entity, attribute: String): Seq[String] =
-    e.listIndexes.filter(n => knownTypes.exists(tp => n == s"${tp}_$attribute")).sorted
+    e.listIndexes.filter(n => e.loadIndex(n).attribute.contains(attribute)).sorted
 
   /** The reference's 8 index types (`IndexTypes.scala:20-45`). */
   val referenceTypes: Seq[String] =
@@ -143,7 +141,7 @@ object IndexOps {
   /** The build-recipe keys [[refresh]] consumes next to the per-type
     * options, recorded by [[createAll]]. */
   val InfoType = "indextype"
-  val InfoAttribute = "attribute"
+  val InfoAttribute = IndexStore.AttributeKey
   val InfoIdCol = "idcol"
 
   /** Rebuild a persisted index from its recorded build recipe — the
@@ -281,56 +279,48 @@ object QueryOps {
   def sequential(entity: DataFrame, idCol: String, nnq: NnQuery): DataFrame =
     Knn.knn(entity, distanceColumnFor(entity, nnq), nnq.k, col(idCol))
 
-  /** Scan a specific index with exact rerank (reference `QueryOp.index`).
-    * Refuses a non-conforming distance family — e.g. L2-built VA bounds
-    * over a Manhattan query would prune true neighbours and return
-    * silently wrong results (reference `isQueryConform`). */
-  def index(entity: DataFrame, idCol: String, idx: VectorIndex, nnq: NnQuery): DataFrame = {
-    require(idx.conformsTo(nnq.distName),
-      s"index ${idx.indexType} does not answer distance '${nnq.distName}' " +
+  /** Why `idx` cannot serve `nnq` over `entity`, or `None` when it can —
+    * the one query-side admission check for every index plan:
+    *  - distance conformity: e.g. L2-built VA bounds over a Manhattan
+    *    query would prune true neighbours and return silently wrong
+    *    results (reference `isQueryConform`);
+    *  - a dense vector column: stored indexes cover the dense encoding,
+    *    so a sparsified entity would fail deep in the kernel type check;
+    *  - for a weighted query, lossless weighted pruning: most structures
+    *    prune with the UNWEIGHTED metric, so a weighted rerank over their
+    *    candidates can miss true weighted neighbours (VA with w ≥ 0
+    *    scales its bounds per dimension and keeps the guarantee). */
+  private def refusal(entity: DataFrame, idx: VectorIndex, nnq: NnQuery): Option[String] =
+    if (!idx.conformsTo(nnq.distName))
+      Some(s"index ${idx.indexType} does not answer distance '${nnq.distName}' " +
         "— scan would be silently lossy; use a conforming index or the sequential plan")
-    // indexes are built over dense vectors; refuse a sparsified entity
-    // up front instead of failing deep in the kernel type check
-    require(!entity.schema.find(_.name == nnq.vecCol)
-        .exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.StructType]),
-      s"entity column '${nnq.vecCol}' is sparsified — stored indexes cover the dense " +
+    else if (entity.schema.find(_.name == nnq.vecCol)
+        .exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.StructType]))
+      Some(s"entity column '${nnq.vecCol}' is sparsified — stored indexes cover the dense " +
         "encoding; rebuild the index or use the sequential plan (sparse kernels)")
+    else if (nnq.weights.exists(ws => !idx.conformsToWeighted(nnq.distName, ws)))
+      Some(s"index ${idx.indexType} cannot answer this weighted query " +
+        "— candidate pruning uses the unweighted metric; use a VA index " +
+        "with non-negative weights or the sequential plan")
+    else None
+
+  /** Scan a specific index with exact rerank (reference `QueryOp.index`);
+    * refuses an index that cannot serve the query. */
+  def index(entity: DataFrame, idCol: String, idx: VectorIndex, nnq: NnQuery): DataFrame = {
+    val reason = refusal(entity, idx, nnq)
+    require(reason.isEmpty, reason.getOrElse(""))
     nnq.weights match {
-      case Some(ws) =>
-        // most index structures prune with the UNWEIGHTED metric, so a
-        // weighted rerank over their candidates can miss true weighted
-        // neighbours — only an index whose bounds honor the weights
-        // losslessly (VA with w ≥ 0) may serve the query
-        require(idx.conformsToWeighted(nnq.distName, ws),
-          s"index ${idx.indexType} cannot answer this weighted query " +
-            "— candidate pruning uses the unweighted metric; use a VA index " +
-            "with non-negative weights or the sequential plan")
-        idx.knnW(entity, idCol, distanceColumn(nnq), nnq.q, ws, nnq.k)
-      case None =>
-        idx.knn(entity, idCol, distanceColumn(nnq), nnq.q, nnq.k)
+      case Some(ws) => idx.knnW(entity, idCol, distanceColumn(nnq), nnq.q, ws, nnq.k)
+      case None => idx.knn(entity, idCol, distanceColumn(nnq), nnq.q, nnq.k)
     }
   }
 
-  /** Choose the hint-walked plan for this entity. A SPARSIFIED entity
-    * (struct vector column) restricts the walk to the sequential plan —
-    * stored indexes cover the dense encoding, so an index plan would
-    * fail deep in the kernel type check. */
+  /** Choose the hint-walked plan for this entity over the indexes that
+    * may serve the query; a sparsified entity walks to the sequential
+    * plan. */
   def choosePlan(entity: DataFrame, indexes: Seq[VectorIndex],
-                 hints: Seq[Planner.Hint], nnq: NnQuery): Planner.Plan = {
-    val sparse = entity.schema.find(_.name == nnq.vecCol)
-      .exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.StructType])
-    // weighted queries plan only onto indexes whose candidate pruning
-    // honors the weights losslessly (VA bounds scale per-dim by w); the
-    // rest prune with the unweighted metric and are excluded — same
-    // restriction shape as sparse entities
-    val usable =
-      if (sparse) Nil
-      else nnq.weights match {
-        case Some(ws) => indexes.filter(_.conformsToWeighted(nnq.distName, ws))
-        case None => indexes
-      }
-    Planner.choose(hints, usable, nnq.distName)
-  }
+                 hints: Seq[Planner.Hint], nnq: NnQuery): Planner.Plan =
+    Planner.choose(hints, indexes.filter(refusal(entity, _, nnq).isEmpty), nnq.distName)
 
   /** Execute an already-chosen plan with encoding-aware distance
     * dispatch (sparse kernels for sparsified entities, like
@@ -357,10 +347,11 @@ object QueryOps {
     * snapshot's frame, or a restriction of it). A kNN query without
     * predicates takes, in order: a named stored index (`index`, else the
     * first hint naming one), the planner's walk of the remaining hints
-    * over the snapshot's fresh indexes, the sequential scan. With
-    * predicates it is a filtered kNN; without a kNN query, a Boolean
-    * scan. A stale named index still serves and is flagged — refusing it
-    * is the caller's policy. */
+    * over the snapshot's fresh indexes built over the query's attribute,
+    * the sequential scan. With predicates it is a filtered kNN; without a
+    * kNN query, a Boolean scan. A named index built over another
+    * attribute is refused; a stale one still serves and is flagged —
+    * refusing it is the caller's policy. */
   def route(snapshot: Entity.Snapshot, frame: DataFrame, idCol: String, nnq: Option[NnQuery],
             predicates: Seq[BooleanPredicates.Predicate], hints: Seq[String],
             index: Option[String]): Routed = (nnq, predicates) match {
@@ -372,12 +363,15 @@ object QueryOps {
       named match {
         case Some(name) =>
           val loaded = snapshot.loadIndex(name)
+          loaded.attribute.filter(_ != q.vecCol).foreach(a => throw new IllegalArgumentException(
+            s"index $name is built over attribute '$a', not the query's attribute '${q.vecCol}'"))
           Routed(this.index(frame, idCol, loaded.index, q), s"index scan ($name)",
             Some(Planner.IndexPlan(loaded.index)), loaded.stale)
         case None if plannerHints.nonEmpty =>
           // a sequential-only walk never touches the index store
           val indexes =
-            if (plannerHints.forall(_ == Planner.SequentialHint)) Nil else snapshot.freshIndexes
+            if (plannerHints.forall(_ == Planner.SequentialHint)) Nil
+            else snapshot.freshIndexesOver(q.vecCol)
           val plan = choosePlan(frame, indexes, plannerHints, q)
           Routed(runPlan(plan, frame, idCol, q), plan.describe, Some(plan), stale = false)
         case None =>
@@ -417,17 +411,20 @@ object QueryOps {
 
   /** All plans racing; observations as they land (reference
     * `QueryOp.parallel` / progressive). Optional hints restrict the
-    * racing set (reference `QueryHintsParallelPathChooser`). */
+    * racing set (reference `QueryHintsParallelPathChooser`). Each call's
+    * legs run under their own job groups, `<groupPrefix><plan>`. */
   def parallel(spark: SparkSession, entity: DataFrame, idCol: String,
                indexes: Seq[VectorIndex], nnq: NnQuery,
-               hints: Seq[Planner.Hint] = Nil, groupPrefix: String = "graft-")
+               hints: Seq[Planner.Hint] = Nil,
+               groupPrefix: String = Progressive.newGroupPrefix())
               (onNext: Progressive.Observation => Unit = _ => ())
               (implicit ec: ExecutionContext): Seq[Progressive.Observation] =
     Progressive.parallel(spark, planSpecsFor(entity, idCol, indexes, nnq, hints),
       groupPrefix)(onNext)
 
   /** Best result by a deadline (reference `QueryOp.timedParallel`).
-    * Hints restrict the racing set exactly as in [[parallel]]. */
+    * Hints restrict the racing set exactly as in [[parallel]]; each call's
+    * legs run under their own job groups. */
   def timedParallel(spark: SparkSession, entity: DataFrame, idCol: String,
                     indexes: Seq[VectorIndex], nnq: NnQuery, deadlineMs: Long,
                     hints: Seq[Planner.Hint] = Nil)
@@ -439,32 +436,20 @@ object QueryOps {
   def cached(fingerprint: String)(compute: => DataFrame): DataFrame =
     cache.getOrElseCompute(fingerprint)(compute)
 
-  private def planSpecs(entity: DataFrame, idCol: String, indexes: Seq[VectorIndex],
-                        nnq: NnQuery): Seq[Progressive.PlanSpec] = {
-    val seq = Progressive.PlanSpec("sequential", 1.0, () => sequential(entity, idCol, nnq))
-    // weighted queries race only indexes whose candidate pruning honors
-    // the weights losslessly (VA bounds scale per-dim by w ≥ 0): the
-    // rest prune over the UNWEIGHTED metric, and a confidence-1.0
-    // "exact" index plan would win the race with a silently wrong top-k
-    val usable = nnq.weights match {
-      case Some(ws) => indexes.filter(_.conformsToWeighted(nnq.distName, ws))
-      case None => indexes.filter(_.conformsTo(nnq.distName))
-    }
-    seq +: usable.map(idx =>
-      Progressive.PlanSpec(s"index:${idx.indexType}", idx.confidence,
-        () => index(entity, idCol, idx, nnq)))
-  }
-
-  /** Restrict the racing plan set by hints — the reference's
+  /** The racing plan set: the sequential scan plus every index that may
+    * serve the query, restricted by hints — the reference's
     * `QueryHintsParallelPathChooser` next to the hint-less
     * `SimpleParallelPathChooser` (`DataQuery.scala:281-287`): each hint
     * contributes the plan it would choose; no hints = race everything. */
   def planSpecsFor(entity: DataFrame, idCol: String, indexes: Seq[VectorIndex],
                    nnq: NnQuery, hints: Seq[Planner.Hint]): Seq[Progressive.PlanSpec] = {
-    val all = planSpecs(entity, idCol, indexes, nnq)
+    val usable = indexes.filter(refusal(entity, _, nnq).isEmpty)
+    val all = Progressive.PlanSpec("sequential", 1.0, () => sequential(entity, idCol, nnq)) +:
+      usable.map(idx => Progressive.PlanSpec(s"index:${idx.indexType}", idx.confidence,
+        () => index(entity, idCol, idx, nnq)))
     if (hints.isEmpty) all
     else {
-      val chosen = hints.map(h => Planner.choose(Seq(h), indexes, nnq.distName).describe).toSet
+      val chosen = hints.map(h => Planner.choose(Seq(h), usable, nnq.distName).describe).toSet
       val picked = all.filter(s => chosen.contains(s.description))
       // unreachable today (choose always yields a plan matching a spec
       // by construction) — but fall back to the EXPLICIT sequential

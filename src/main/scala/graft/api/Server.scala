@@ -52,7 +52,8 @@ import graft.operators.{BooleanPredicates, SetAlgebra}
   * |                   |  |bm25_indexed, terms: [..], idCol? k? (bm25*)}  |
   * | /query/knn        | {entity, idCol, vecCol, q: [x,…], dist?, k?,     |
   * |                   |  index? (stored index name; exact rerank; a      |
-  * |                   |  stale index serves, flagged `stale: true`),     |
+  * |                   |  stale index serves, flagged `stale: true`; one  |
+  * |                   |  built over another attribute is refused),       |
   * |                   |  hints? (planner hint names, walked in order)}   |
   * | /query/page       | {pageToken}                                      |
   * | /entity/insert/stream | newline-delimited JSON rows (body streamed)  |
@@ -447,7 +448,7 @@ class Server private(spark: SparkSession, base: String, http: HttpServer,
       val idCol = reqField(req, "idCol").asText()
       val nnq = nnqOf(req)
       val snap = e.snapshot
-      val indexes = snap.freshIndexes
+      val indexes = snap.freshIndexesOver(nnq.vecCol)
       val frame = snap.frame
 
       ex.getResponseHeaders.set("Content-Type", "application/x-ndjson")

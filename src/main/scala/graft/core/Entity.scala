@@ -638,8 +638,9 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
 
   def listIndexes: Seq[String] = graft.index.IndexStore.list(dir.toString)
 
-  /** Every stored index that is fresh against the current stamp — the
-    * candidate set the planner and the plan race choose from. */
+  /** Every stored index that is fresh against the current stamp, over
+    * any attribute; [[Entity.Snapshot.freshIndexesOver]] scopes it to
+    * the one a kNN query ranks. */
   def freshIndexes: Seq[graft.index.VectorIndex] = snapshot.freshIndexes
 
   def dropIndex(name: String): Unit =
@@ -785,6 +786,14 @@ object Entity {
 
     def freshIndexes: Seq[graft.index.VectorIndex] =
       listIndexes.map(loadIndex).filterNot(_.stale).map(_.index)
+
+    /** The fresh stored indexes built over `attribute`: the one set every
+      * kNN index walk or plan race chooses from. An index over another
+      * attribute would rank the query's vector against the wrong column's
+      * candidates. */
+    def freshIndexesOver(attribute: String): Seq[graft.index.VectorIndex] =
+      listIndexes.map(loadIndex).filter(l => !l.stale && l.attribute.contains(attribute))
+        .map(_.index)
 
     /** Persist `df` — this snapshot's frame or one of its index tables —
       * and materialize it now. It is unpersisted when this snapshot stops

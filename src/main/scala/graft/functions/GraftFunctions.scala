@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * Two wiring paths:
   *  - config: `spark.sql.extensions=graft.functions.GraftExtensions`
-  *    (build-time, cluster-wide);
+  *    (build-time, cluster-wide; the functions only, no optimizer rule);
   *  - runtime: `GraftFunctions.register(spark)` on a live session.
   */
 object GraftFunctions {
@@ -370,15 +370,14 @@ object GraftFunctions {
   }
 }
 
-/** `spark.sql.extensions` entry point: the SQL function surface plus
-  * the transparent kNN index-acceleration rule (a no-op until an index
-  * is registered with [[graft.plans.KnnIndexRewrite]]). */
+/** `spark.sql.extensions` entry point: the SQL function surface. It
+  * injects no optimizer rule; a kNN query uses an index through
+  * [[graft.api.QueryOps.route]]'s hint walk. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.builders.foreach { case (name, builder) =>
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo("graft.functions", name), builder))
     }
-    ext.injectOptimizerRule(_ => graft.plans.KnnIndexRewrite)
   }
 }

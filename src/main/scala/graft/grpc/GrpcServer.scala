@@ -67,7 +67,8 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
     })
 
   /** Cancel thunks for running multi-plan queries, by queryid — lets
-    * `StopQuery` reach every racing job group of a progressive run. */
+    * `StopQuery` reach every racing job group of a progressive, parallel
+    * or timed run. */
   private val running = scala.collection.concurrent.TrieMap.empty[String, () => Unit]
 
   // ---- wire plumbing -------------------------------------------------------
@@ -428,7 +429,8 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
       try {
         val e = Entity.open(spark, base, str(req, "entity"))
         val attribute = str(req, "attribute")
-        val indexes = e.listIndexes.sorted.map(n => e.loadIndex(n).index)
+        // train on the set the router walks for this attribute
+        val indexes = e.snapshot.freshIndexesOver(attribute)
         implicit val ec: scala.concurrent.ExecutionContext =
           scala.concurrent.ExecutionContext.global
         val frame = e.read()
@@ -457,7 +459,8 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
       try {
         val e = Entity.open(spark, base, str(req, "entity"))
         val dist = { val d = str(req, "distance"); if (d.isEmpty) "euclidean" else d }
-        val indexes = e.listIndexes.sorted.map(n => e.loadIndex(n).index)
+        // the request names no attribute: every fresh index
+        val indexes = e.freshIndexes
         val pd = msg("ScoredExecutionPathsMessage")
         val pathD = msg("ScoredExecutionPathMessage")
         val out = withAck("ScoredExecutionPathsMessage", ok = true)
@@ -696,29 +699,16 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
           import scala.concurrent.ExecutionContext.Implicits.global
           val queryid = try str(req, "queryid") catch { case _: Exception => "" }
           try Entity.leasing {
-            val entity = Entity.open(spark, base, str(sub(req, "from"), "entity"))
-            val snap = entity.snapshot
             val qd = req.getDescriptorForType
             require(req.hasField(qd.findFieldByName("nnq")),
               "nearest neighbour query necessary for parallel query")
-            val nnq = parseNnq(sub(req, "nnq"))
             val hints =
               if (!useHints) Nil
               else graft.plans.Planner.hintsByName(strs(req, "hints"))
-            // partition restriction applies to the rerank frame, so every
-            // racing plan's FINAL rows honor it (index candidates from
-            // other partitions drop in the rerank semi-join)
-            val specs = graft.api.QueryOps.planSpecsFor(
-              restrictPartitions(entity, snap.frame, nnqPartitions(sub(req, "nnq"))),
-              Entity.ApId, snap.freshIndexes, nnq, hints)
-            val prefix = if (queryid.isEmpty) "graft-" else s"graft-$queryid-"
-            if (queryid.nonEmpty) running.put(queryid, () =>
-              specs.foreach(p =>
-                spark.sparkContext.cancelJobGroup(s"$prefix${p.description}")))
-            // StreamObserver is not thread-safe and the racing plans complete
-            // on independent Futures — serialize every emission on one lock
-            val emitLock = new Object
-            try {
+            racing(req, queryid, hints) { (specs, prefix) =>
+              // StreamObserver is not thread-safe and the racing plans complete
+              // on independent Futures — serialize every emission on one lock
+              val emitLock = new Object
               graft.plans.Progressive.parallel(spark, specs, prefix) { o =>
                 val msg = o.result match {
                   case scala.util.Success(rows) =>
@@ -732,7 +722,7 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
                 emitLock.synchronized(obs.onNext(msg))
               }
               emitLock.synchronized(obs.onCompleted())
-            } finally if (queryid.nonEmpty) running.remove(queryid)
+            }
           } catch {
             case e: Exception =>
               obs.onNext(errorResults(e.getMessage)); obs.onCompleted()
@@ -875,6 +865,30 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
       .asInstanceOf[Descriptors.EnumValueDescriptor].getName == "OK"
   }
 
+  /** Race the plans of a progressive, parallel or timed query: the
+    * sequential scan and each fresh index built over the query's
+    * attribute that may serve it, restricted by `hints`. `race` runs them
+    * under a job-group prefix of their own; with a queryid, `StopQuery`
+    * cancels every leg meanwhile. The partition restriction applies to
+    * the rerank frame, so every racing plan's FINAL rows honor it (index
+    * candidates from other partitions drop in the rerank semi-join). */
+  private def racing[T](req: DynamicMessage, queryid: String,
+                        hints: Seq[graft.plans.Planner.Hint])
+                       (race: (Seq[graft.plans.Progressive.PlanSpec], String) => T): T = {
+    val entity = Entity.open(spark, base, str(sub(req, "from"), "entity"))
+    val snap = entity.snapshot
+    val nnq = parseNnq(sub(req, "nnq"))
+    val specs = QueryOps.planSpecsFor(
+      restrictPartitions(entity, snap.frame, nnqPartitions(sub(req, "nnq"))),
+      Entity.ApId, snap.freshIndexesOver(nnq.vecCol), nnq, hints)
+    val prefix =
+      if (queryid.isEmpty) graft.plans.Progressive.newGroupPrefix() else s"graft-$queryid-"
+    if (queryid.nonEmpty) running.put(queryid, () =>
+      specs.foreach(p => spark.sparkContext.cancelJobGroup(s"$prefix${p.description}")))
+    try race(specs, prefix)
+    finally if (queryid.nonEmpty) running.remove(queryid)
+  }
+
   /** One query, holding the snapshots it reads leased until its result
     * message is built — also for the batch and streaming calls, which
     * run queries on other threads. */
@@ -913,12 +927,9 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
             req.hasField(qd.findFieldByName("nnq")) &&
             !req.hasField(qd.findFieldByName("bq"))) {
           import scala.concurrent.ExecutionContext.Implicits.global
-          val entity = Entity.open(spark, base, str(fromMsg, "entity"))
-          val snap = entity.snapshot
-          val df = restrictPartitions(entity, snap.frame, nnqPartitions(sub(req, "nnq")))
-          val o = QueryOps.timedParallel(spark, df, Entity.ApId, snap.freshIndexes,
-            parseNnq(sub(req, "nnq")), timeLimitMs,
-            graft.plans.Planner.hintsByName(strs(req, "hints")))
+          val o = racing(req, queryid, graft.plans.Planner.hintsByName(strs(req, "hints"))) {
+            (specs, prefix) => graft.plans.Progressive.timed(spark, specs, timeLimitMs, prefix)
+          }
           return (o.result match {
             case scala.util.Success(rows) =>
               rowsMessage(rows.toSeq,

@@ -24,11 +24,17 @@ import org.apache.spark.sql.SparkSession
   * stale. A stale index still scans (its candidates simply predate the
   * mutation — same semantics as the reference, which keeps stale indexes
   * queryable but deprioritized) — callers such as the planner can filter
-  * on the flag.
+  * on the flag. `load` also reports the attribute the index was built
+  * over, which scopes the planner's choice to the query's attribute.
   */
 object IndexStore {
 
-  final case class Loaded(index: VectorIndex, stale: Boolean)
+  /** A reloaded index; `attribute` is the vector attribute it was built
+    * over, `None` when neither its recipe nor its name tells. */
+  final case class Loaded(index: VectorIndex, stale: Boolean, attribute: Option[String])
+
+  /** The build-recipe key naming the attribute an index was built over. */
+  val AttributeKey = "attribute"
 
   /** Everything needed to rebuild an index object minus its DataFrame. */
   private final case class SavedMeta(indexType: String, idCol: String,
@@ -195,7 +201,12 @@ object IndexStore {
       }
       case (other, _) => throw new IllegalArgumentException(s"unknown index type: $other")
     }
-    Loaded(idx, currentStamp.exists(_ != meta.stamp))
+    // the recipe names the attribute; without one, the `<type>_<attribute>`
+    // naming convention does
+    val attribute = buildInfo(baseDir, name).get(AttributeKey)
+      .orElse(Some(name.stripPrefix(s"${idx.indexType}_"))
+        .filter(a => a.nonEmpty && a != name))
+    Loaded(idx, currentStamp.exists(_ != meta.stamp), attribute)
   }
 
   def exists(baseDir: String, name: String): Boolean =

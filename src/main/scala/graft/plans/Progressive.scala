@@ -33,6 +33,12 @@ object Progressive {
       Planner.record(o.planDescription,
         Planner.Measurement(o.timeNanos, o.confidence, p.rows))
 
+  private val races = new java.util.concurrent.atomic.AtomicLong()
+
+  /** A job-group prefix no other race in this JVM uses, so a race that
+    * cancels its own groups never reaches a concurrent race's legs. */
+  def newGroupPrefix(): String = s"graft-race${races.incrementAndGet()}-"
+
   /** Launch all plans; invoke `onNext` per completion; return all
     * observations once every plan finishes.
     *
@@ -41,7 +47,7 @@ object Progressive {
     * can cancel exactly this run's groups (reference
     * `DataQuery.scala:412-417` cancels by job id). */
   def parallel(spark: SparkSession, plans: Seq[PlanSpec],
-               groupPrefix: String = "graft-")
+               groupPrefix: String = newGroupPrefix())
               (onNext: Observation => Unit = _ => ())
               (implicit ec: ExecutionContext): Seq[Observation] = {
     val obs = new ConcurrentLinkedQueue[Observation]()
@@ -80,8 +86,10 @@ object Progressive {
     * no still-running plan can displace it (equal-confidence plans are
     * interchangeable in exactness; only the measured time differs).
     * This keeps an exact-plan race paced by its FASTEST exact leg, not
-    * by the slowest approximate straggler. */
-  def timed(spark: SparkSession, plans: Seq[PlanSpec], deadlineMs: Long)
+    * by the slowest approximate straggler. Job groups are named as in
+    * [[parallel]]. */
+  def timed(spark: SparkSession, plans: Seq[PlanSpec], deadlineMs: Long,
+            groupPrefix: String = newGroupPrefix())
            (implicit ec: ExecutionContext): Observation = {
     val obs = new ConcurrentLinkedQueue[Observation]()
     val first = new CountDownLatch(1)
@@ -98,7 +106,7 @@ object Progressive {
         if (cancelled.get()) {
           all.countDown()
         } else try {
-          spark.sparkContext.setJobGroup(s"graft-${p.description}",
+          spark.sparkContext.setJobGroup(s"$groupPrefix${p.description}",
             s"timed plan ${p.description}", interruptOnCancel = true)
           val t0 = System.nanoTime()
           val r = Try(p.run().collect())
@@ -130,7 +138,7 @@ object Progressive {
     }
     if (obs.isEmpty) first.await()
     cancelled.set(true)
-    plans.foreach(p => spark.sparkContext.cancelJobGroup(s"graft-${p.description}"))
+    plans.foreach(p => spark.sparkContext.cancelJobGroup(s"$groupPrefix${p.description}"))
     import scala.jdk.CollectionConverters._
     val done = obs.asScala.toSeq.filter(_.result.isSuccess)
     if (done.nonEmpty) done.maxBy(o => (o.confidence, -o.timeNanos))

@@ -23,13 +23,4 @@ object Bridge {
     * the analyzer then resolves normally). */
   def expressionEager(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
-
-  /** Wrap an (analyzed) logical plan back into a DataFrame — needed by
-    * optimizer rules that graft DataFrame-built sub-plans into a plan
-    * under rewrite (`Dataset.ofRows` is `private[sql]`). */
-  def ofRows(spark: org.apache.spark.sql.SparkSession,
-             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-  : org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
 import graft.functions.Distances
 import graft.index._
 import graft.operators.Knn
@@ -633,5 +634,33 @@ class IndexSpec extends SparkSpec {
       .select("tid").collect().map(_.getLong(0)).toSeq
     reranked should contain(bruteIds.head)
     info(f"vote recall@$K = ${recall(reranked)}%.3f")
+  }
+
+  private val sfDir = "/root/testdata/sf0.001"
+
+  test("repeated identical queries reuse the cached bounding threshold (fewer jobs)") {
+    val idx = VAIndex.buildFixed(Tables.embeddings(spark, sfDir), "vec_id", "embedding", p = 2.0)
+    val q = Seq.tabulate(64)(i => i * 0.01)
+    def countJobs(f: => Unit): Int = {
+      val counter = new java.util.concurrent.atomic.AtomicInteger()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          counter.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(l)
+      try {
+        f
+        // listener events are async: give the bus a moment to drain
+        Thread.sleep(500)
+        counter.get()
+      } finally spark.sparkContext.removeSparkListener(l)
+    }
+    val first = countJobs(idx.candidates(q, 100).collect())
+    val second = countJobs(idx.candidates(q, 100).collect())
+    withClue(s"first=$first second=$second: ") {
+      second should be < first // the k-th-ub bounding job was skipped
+    }
+    // a different (q, k) probes again and stays lossless
+    idx.candidates(q, 50).count() should be > 0L
   }
 }

@@ -133,6 +133,37 @@ class OpsSpec extends SparkSpec {
     o.result.get.length shouldBe 10
   }
 
+  test("two timedParallel calls run their legs under disjoint job groups") {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    // the job groups one call ran under; a marker job drains the listener bus
+    def groupsOf(marker: String)(f: => Unit): Set[String] = {
+      seen.clear()
+      f
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSet - marker
+    }
+    sc.addSparkListener(listener)
+    try {
+      // one leg each, so no cancelled straggler starts a job after its call returns
+      def race(): Unit = QueryOps.timedParallel(spark, data, "id", Nil, nnq, 60000)
+      val first = groupsOf("ops-marker-1")(race())
+      val second = groupsOf("ops-marker-2")(race())
+      first should not be empty
+      second should not be empty
+      first intersect second shouldBe empty
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("cached query computes once") {
     var n = 0
     def make() = { n += 1; data.limit(2) }
