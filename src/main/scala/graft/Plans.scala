@@ -2,221 +2,41 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Plan-shape audit: asserts the scale-critical physical-plan shapes
-  * (pushed filters, TakeOrderedAndProject for top-k, broadcast for
-  * small dims, no NLJ on the binned joins, zero-shuffle per-row
-  * kernels, z-order file stats). Two consumers:
+import graft.battery.{Battery, EntityQueries, Q}
+
+/** Plan-shape audit: runs every [[graft.battery.Gate]] the registry's
+  * queries declare (pushed filters, TakeOrderedAndProject for top-k,
+  * broadcast for small dims, no NLJ on the binned joins, zero-shuffle
+  * per-row kernels) against its query's executed plan, plus the z-order
+  * file-stats check. Two consumers:
   *
   *  - `sbt "runMain graft.Plans <sfDir>"` — prints `[plan-ok]` /
   *    `[plan-MISS]` with the offending plan and exits non-zero on any
   *    miss (the interactive diagnostic).
-  *  - The `plan_shapes` entry in [[SparkEntry.queries]] — runs the
-  *    same [[Plans.audit]] and returns `(check_name, ok)` rows checked
-  *    against an all-true oracle, so a silently re-planned shape
-  *    (Catalyst upgrade, accidental operator change) fails the
-  *    driver's CORRECTNESS gate, not just the test suite.
+  *  - The `plan_shapes` battery query — runs the same [[Plans.audit]]
+  *    and returns `(check_name, ok)` rows checked against an all-true
+  *    oracle, so a silently re-planned shape (Catalyst upgrade,
+  *    accidental operator change) fails the battery's correctness
+  *    check, not just the test suite.
   */
 object Plans {
 
-  /** Marker-based checks: query name → (what, markers that must all
-    * appear in the executed plan). */
-  private val markerChecks: Seq[(String, String, Seq[String])] = Seq(
-    ("knn_manhattan", "TakeOrderedAndProject", Seq("TakeOrderedAndProject")),
-    ("projection_filter", "PushedFilters reach parquet", Seq("PushedFilters: [", "GreaterThan(l_quantity")),
-    ("q1_agg", "partial aggregation before shuffle", Seq("partial_sum", "HashAggregate")),
-    ("set_intersect", "semi join (broadcast-able)", Seq("LeftSemi")),
-    ("compound_setalgebra", "recursive tree plans as chained semi/anti joins",
-      Seq("LeftSemi", "LeftAnti")),
-    ("knn_rerank_half", "rerank candidates via semi join", Seq("LeftSemi")),
-    ("predicate_in_lt", "IN-filter pushed", Seq("PushedFilters: [", "In(l_returnflag")),
-    ("q3_shipping", "small dimension broadcast into fact join", Seq("BroadcastHashJoin")),
-    ("q5_region_revenue", "region→nation→supplier dims broadcast into the fact pipeline",
-      Seq("BroadcastHashJoin")),
-    ("q18_large_orders", "agg-filtered join-back cut by bounded TakeOrdered, partial sums map-side",
-      Seq("TakeOrderedAndProject", "partial_sum")),
-    ("events_cube", "all cube grouping sets ride one Expand + partial aggregation",
-      Seq("Expand", "partial_count")),
-    ("events_rolling_avg", "range frame runs over the aggregated daily relation",
-      Seq("Window", "partial_count")),
-    ("doc_top_terms", "idf joins back as a broadcast on the term key",
-      Seq("BroadcastHashJoin", "partial_count")),
-    ("ann_batch_topk", "map-side partial bounded top-k, no qid window funnel",
-      Seq("ObjectHashAggregate", "partial_bounded_topk")),
-    ("ann_ivf_topk", "IVF candidates aggregated map-side",
-      Seq("ObjectHashAggregate", "partial_bounded_topk")),
-    ("text_bm25", "posting partial aggregation + broadcast term stats",
-      Seq("partial_count", "BroadcastHashJoin")),
-    ("knn_sparse", "sparse kernel scans the struct directly (no densify)",
-      Seq("sparse_euclidean", "TakeOrderedAndProject")),
-    // the filter must appear INSIDE the brackets — an empty
-    // "PartitionFilters: []" plus a post-scan filter would otherwise
-    // match both markers and hide a pruning regression
-    ("partition_pruned_scan", "entity key-skip reaches the scan as partition pruning",
-      Seq("PartitionFilters: [ap_partition")),
-    ("repetition_signals_perrow", "per-row kernel stays in the scan stage",
-      Seq("repetition_stats")),
-    ("kv_point_lookup", "KV lookup prunes to bucket dirs + pushes the key filter",
-      Seq("PartitionFilters: [__kv_bucket", "PushedFilters: [", "In(p_partkey")),
-    ("corpus_contamination", "benchmark postings broadcast; corpus side never shuffles",
-      Seq("BroadcastHashJoin")),
-    ("pack_chunk_rows", "chunk rows stay on the one shard-keyed window shuffle",
-      Seq("Window", "Generate explode")),
-    ("repeated_chunks", "start offsets explode before window hashing; one groupBy",
-      Seq("Generate explode", "md5", "HashAggregate")),
-    // the assignment (sort_array centroid kernel) is materialized ONCE
-    // via Materialize — both self-join sides must read the
-    // checkpointed RDD, never recompute the k-kernel projection
-    ("semantic_dedup", "checkpointed assignment feeds both pair-join sides (no recompute)",
-      Seq("Scan ExistingRDD")),
-    ("corpus_mix_report", "map-side partial aggregation on (source, lang)",
-      Seq("partial_count", "HashAggregate")),
-    ("unigram_logppl", "token-keyed partial counts; scalar total broadcast",
-      Seq("partial_count", "BroadcastNestedLoopJoin")),
-    ("knn_doc_lookup", "top-k bounds BEFORE the metadata join; doc side broadcast",
-      Seq("TakeOrderedAndProject", "BroadcastHashJoin")),
-    ("hash_features", "bucket counts partial-aggregate before the id shuffle",
-      Seq("partial_count", "HashAggregate")),
-    ("zorder_pruned_scan", "partkey range filter pushed to the z-ordered scan",
-      Seq("PushedFilters: [", "GreaterThanOrEqual(l_partkey", "LessThanOrEqual(l_partkey")),
-    ("neardup_keep_best", "per-component priority window + anti-join of pairs-scale losers",
-      Seq("Window", "LeftAnti")),
-    // the vector leg's RANKING must scan the SQ8 byte-codes relation
-    // (pq_adc kernel), with the raw embedding table only reached
-    // through the candidate-bounded semi-join rerank
-    ("hybrid_search_rrf", "TakeOrdered-bounded fusion; vector leg ranks over index codes",
-      Seq("TakeOrderedAndProject", "FullOuter", "pq_adc", "LeftSemi")),
-    ("event_funnel", "funnel folds per-user sorted collect in one aggregation; " +
-      "non-step events nulled out map-side, below the exchange",
-      Seq("collect_list", "ObjectHashAggregate", "IN (click,view,purchase)")),
-    ("text_index_bm25", "index-served BM25: postings read is bucket-PARTITION-pruned",
-      Seq("PartitionFilters: [", "ap_bucket")),
-    ("strip_repeated_chunks", "dup-hash relation joins back; rewrite is an array filter",
-      Seq("Generate explode", "md5", "filter")),
-    // --- round-16 shapes ---
-    ("text_nfc_normalize", "NFC kernel stays in the scan stage",
-      Seq("nfc_normalize")),
-    ("url_blocklist_filter", "blocklist is a broadcast anti-join",
-      Seq("BroadcastHashJoin", "LeftAnti")),
-    ("ann_binary_topk", "Hamming phase is a map-side bounded top-k over popcount",
-      Seq("ObjectHashAggregate", "partial_bounded_topk", "bit_count")),
-    ("cdc_chunks", "CDC bounds kernel in the scan; chunks explode in-row",
-      Seq("cdc_bounds", "Generate explode")),
-    ("event_funnel_cycles", "packed fold in one aggregation; step pre-filter below the exchange",
-      Seq("collect_list", "ObjectHashAggregate", "IN (click,view,purchase)")),
-    ("quality_adaptive_length", "quantile bands broadcast back onto the scan",
-      Seq("BroadcastHashJoin", "percentile")),
-    ("url_domain_cap", "per-domain cap is one keyed window",
-      Seq("Window")),
-    ("bigram_logppl", "model branches read the materialized multiplicities; scalar total broadcast",
-      Seq("Scan ExistingRDD", "partial_sum", "BroadcastNestedLoopJoin")),
-    ("index_bsq_knn", "sign-code scan bounds candidates before the rerank semi-join",
-      Seq("TakeOrderedAndProject", "LeftSemi", "bit_count")),
-    ("contamination_rate_report", "benchmark postings broadcast; rollup partial-aggregates",
-      Seq("BroadcastHashJoin", "partial_count")),
-    // --- round-17 shapes ---
-    ("maxsim_ivf_topk", "ONE batched candidate pass: per-qid bounded top-k over the codes scan",
-      Seq("posexplode", "partial_bounded_topk", "pq_adc")),
-    ("sample_temperature_mix", "factor table broadcast-joins back (no literal map)",
-      Seq("BroadcastHashJoin")),
-    ("sample_token_budget", "budget table broadcast; one domain-keyed window",
-      Seq("BroadcastHashJoin", "Window")),
-    ("distinct_kmv", "KMV sketch partial-aggregates map-side (≤k longs per partition-group)",
-      Seq("partial_kmv_distinct", "ObjectHashAggregate")),
-    ("heavy_hitters", "MG summary partial-aggregates map-side (≤m counters per partition)",
-      Seq("partial_heavy_hitters", "ObjectHashAggregate")),
-    ("event_props_stats", "JSON extraction aggregates map-side over the scan",
-      Seq("partial_count", "partial_min")),
-    // the sketch leg runs eagerly (bounded |types|-array collect) so it
-    // is not part of the returned plan; the assertable shape is the
-    // exact calibration leg: broadcast keyed join + map-side count over
-    // a pushed-filter scan
-    ("distinct_overlap", "exact overlap leg broadcasts + partial-aggregates",
-      Seq("BroadcastHashJoin", "partial_count", "PushedFilters")),
-    // the pair relation is materialized ONCE via Materialize (the
-    // cached hash relation feeds counts + both self-join sides, then is
-    // released) — the returned plan must read the checkpointed RDD, never
-    // recompute the rolling-hash kernel per consumer
-    ("winnow_neardup", "checkpointed pairs (hash relation cached, kernel runs once)",
-      Seq("Scan ExistingRDD")),
-    ("q4_order_priority", "EXISTS decorrelates to a left semi join",
-      Seq("LeftSemi")),
-    ("q14_promo_revenue", "part dim broadcast; single-row conditional agg",
-      Seq("BroadcastHashJoin", "partial_sum")),
-    ("q22_idle_balance", "scalar-avg broadcast; NOT EXISTS is a left anti join",
-      Seq("LeftAnti", "BroadcastHashJoin")),
-    // --- round-18 shapes ---
-    ("geo_polygon_intersects", "5-row region poly dim broadcast under the intersects predicate",
-      Seq("BroadcastNestedLoopJoin")),
-    // the PushedFilters list renders truncated ("GreaterThanOrEqual(l_shipda…")
-    // so markers stop at the visible prefix
-    ("q6_forecast_revenue", "all predicates pushed to the scan; map-side partial sum",
-      Seq("PushedFilters: [IsNotNull(l_shipdate)", "GreaterThanOrEqual(l_shipda",
-        "partial_sum")),
-    ("q8_market_share", "part/supplier/nation dims broadcast into the fact pipeline",
-      Seq("BroadcastHashJoin", "partial_sum")),
-    ("q9_product_profit", "name-matched part broadcast; name filter pushed to the part scan",
-      Seq("BroadcastHashJoin", "StringContains(p_name,red)", "partial_sum")),
-    ("q13_order_distribution", "LEFT OUTER keeps zero-order customers; double aggregation",
-      Seq("LeftOuter", "partial_count")),
-    ("q15_top_supplier", "scalar max equi-joins back as a 1-row broadcast; winner broadcast into supplier",
-      Seq("BroadcastHashJoin", "partial_max")),
-    ("q17_small_quantity_revenue", "brand parts + per-part (sum,cnt) both broadcast back",
-      Seq("BroadcastHashJoin", "partial_sum")),
-    ("q20_excess_suppliers", "aggregate-then-semi-join nesting plans as a LEFT SEMI",
-      Seq("LeftSemi", "partial_sum")),
-    ("geo_fence_hourly", "fence dim broadcast; codegen raycast kernel in the join condition",
-      Seq("BroadcastNestedLoopJoin", "partial_count", "poly_contains")),
-    ("geo_clip_area", "Sutherland-Hodgman fold is a pure projection over the dim scan",
-      Seq("aggregate(")),
-    ("geo_tile_pruned_scan", "radius tiles prune at the scan as partition filters",
-      Seq("PartitionFilters: [ap_partition")),
-    ("geo_extent_by_nation", "extents aggregate map-side; no geometry shuffles",
-      Seq("partial_min", "partial_count", "HashAggregate")))
-
-  /** Binned joins that must plan as hash equi-joins, never NLJ. */
-  private val noNljChecks: Seq[(String, String)] = Seq(
-    ("range_join_price_bands", "binned hash equi-join"),
-    ("session_overlap_join", "interval-overlap binned equi-join"),
-    ("geo_radius_join", "lat/lng grid equi-join"),
-    ("geo_contains_join", "square-grid tile equi-join + exact raycast"),
-    ("geo_buffer_contains", "buffer octagon tile equi-join"),
-    ("geo_nearest_poi", "3x3-neighborhood grid equi-join + per-point window"),
-    ("geo_geodesic_nearest", "lat/lng radius-grid equi-join + per-point window"),
-    ("geo_tiling_adjacency_join", "tile equi-join + min-common-tile report-once, polygon x polygon"),
-    ("fuzzy_name_pairs", "deletion-neighborhood variant equi-join + levenshtein verify"),
-    ("fuzzy_typo_lookup", "typo variants equi-join the dictionary neighborhood"))
-
-  /** Per-row pipelines that must not shuffle before their
-    * (presentation-only) global sort. */
-  private val noShuffleChecks: Seq[(String, String)] = Seq(
-    ("repetition_signals_perrow", "zero non-sort exchanges"),
-    ("sample_weighted_len", "weighted sample is a pure codegen filter"),
-    ("distance_dispatch", "alias dispatch is a pure projection over the scan"),
-    ("url_canonicalize", "canonicalization is a pure projection over the scan"),
-    ("sample_split_assign", "split labels are a pure codegen projection"),
-    ("text_script_profile", "script counting is a pure projection over the scan"),
-    ("winnow_profile", "fingerprint profile is a pure kernel projection over the scan"),
-    ("geo_polygon_contains", "raycast predicate is a pure codegen filter over the scan"),
-    ("geo_line_distance", "segment-distance kernel is a pure projection over the scan"),
-    ("geo_polygon_stats", "shoelace measures are per-row kernels over the dim scan"),
-    ("geo_geodesic_measures", "great-circle measures are per-row trig folds over the dim scan"),
-    ("geo_geodesic_buffer", "destination-point buffer + measures are per-row folds over the dim scan"),
-    ("geo_geodesic_dwithin", "geodesic radius predicate is a pure filter over the scan"),
-    ("geo_covers_boundary", "covers + on-segment tests are per-row folds over the scan"),
-    ("geo_geodesic_antimeridian", "dateline wrap is exact per-row arithmetic over the dim scan"),
-    ("geo_geodesic_spheroid", "spheroid-radius measures are per-row trig folds over the dim scan"),
-    ("geo_geodesic_azimuth", "bearing is a pure trig projection over the point scan"))
+  /** The one check that reads a layout, not a plan. */
+  private val ZorderCheck = "layout:zorder_file_stats"
 
   /** Stable, sorted names of every audited shape — the `plan_shapes`
-    * oracle is generated from this list, so adding a check here is the
-    * ONLY step needed to put it under the driver's correctness gate. */
+    * oracle is generated from this list, so adding a gate to a query's
+    * `Q` is the ONLY step needed to put it under the battery's
+    * correctness check. */
   val checkNames: Seq[String] =
-    (markerChecks.map(_._1).map("shape:" + _) ++
-      noNljChecks.map("no_nlj:" + _._1) ++
-      noShuffleChecks.map("no_shuffle:" + _._1) ++
-      Seq("window:event_asof_attribution", "layout:zorder_file_stats",
-        "reuse:event_top_paths", "reuse:q21_waiting_suppliers",
-        "no_window:fuzzy_name_components", "reuse:bigram_logppl")).sorted
+    (Battery.all.flatMap(_.checks.map(_._1)) :+ ZorderCheck).sorted
+
+  /** Every query whose plan the audit materializes. */
+  private def gated: Seq[Q] = Battery.all.filter(_.gates.nonEmpty)
+
+  /** Their names (exposed for the dev-only PlanAuditProbe timing
+    * harness). */
+  private[graft] def auditPlanNames: Seq[String] = gated.map(_.name)
 
   /** Run every audit; returns (check_name, ok, detail) — detail is the
     * offending plan on a miss, a short note on success.
@@ -228,36 +48,25 @@ object Plans {
     * with every shape added — the checks themselves then read the
     * pre-planned strings serially, so results are identical to the
     * sequential form. */
-  /** Every query whose plan the audit materializes (exposed for the
-    * dev-only PlanAuditProbe timing harness). */
-  private[graft] def auditPlanNames: Seq[String] =
-    (markerChecks.map(_._1) ++ noNljChecks.map(_._1) ++
-      noShuffleChecks.map(_._1) ++
-      Seq("event_asof_attribution", "event_top_paths",
-        "q21_waiting_suppliers", "fuzzy_name_components",
-        "bigram_logppl")).distinct
-
   def audit(spark: SparkSession, sfDir: String): Seq[(String, Boolean, String)] = {
-    val planNames: Seq[String] = auditPlanNames
     // pool sized to the host, not a constant: the audit is driver-side
     // Catalyst planning (~0.5 CPU-s per query at 100 shapes) plus the
     // eager-builder queries' own small jobs — 8 threads left a 32-core
     // driver planning-bound (r22: 7.0 s wall at 67 CPU-s)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(planNames.size,
+      math.max(1, math.min(gated.size,
         math.min(24, Runtime.getRuntime.availableProcessors))))
     val plans: Map[String, String] =
       try {
         implicit val ec: scala.concurrent.ExecutionContext =
           scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        val futures = planNames.map { name =>
-          name -> scala.concurrent.Future {
+        val futures = gated.map { q =>
+          q.name -> scala.concurrent.Future {
             // child threads inherit no active session by default when
             // spawned from a pool — pin it so operator code that asks
             // for the active session plans against the right one
             org.apache.spark.sql.SparkSession.setActiveSession(spark)
-            SparkEntry.queries(name)(spark, sfDir)
-              .queryExecution.executedPlan.toString
+            q.build(spark, sfDir).queryExecution.executedPlan.toString
           }
         }
         futures.map { case (name, f) =>
@@ -265,109 +74,26 @@ object Plans {
             scala.concurrent.duration.Duration.Inf)
         }.toMap
       } finally pool.shutdown()
-    def plan(name: String): String = plans(name)
-
-    val marker = markerChecks.map { case (name, what, markers) =>
-      val p = plan(name)
-      val missing = markers.filterNot(p.contains)
-      ("shape:" + name, missing.isEmpty,
-        if (missing.isEmpty) what else s"expected $missing\n$p")
-    }
-
-    // the as-of join must plan as ONE keyed shuffle + running window —
-    // no join operator at all
-    val asof = {
-      val p = plan("event_asof_attribution")
-      val joins = "Join".r.findAllIn(p).length
-      ("window:event_asof_attribution", joins == 0 && p.contains("Window"),
-        if (joins == 0) "tagged-union window, zero joins"
-        else s"expected join-free window plan\n$p")
-    }
-
-    // every binned join in the family must be a hash equi-join — a
-    // Catalyst upgrade silently re-planning any of them into
-    // BroadcastNestedLoopJoin/CartesianProduct is a scale regression
-    val nlj = noNljChecks.map { case (name, what) =>
-      val p = plan(name)
-      val ok = !p.contains("NestedLoop") && !p.contains("CartesianProduct") &&
-        p.contains("Join")
-      ("no_nlj:" + name, ok,
-        if (ok) s"$what, no nested loop" else s"expected hash join without NLJ\n$p")
-    }
-
-    // negative shape: no shuffle before the final presentation sort —
-    // strip the Sort's own range exchange, then expect zero remaining.
-    // BroadcastExchange ships a tiny build side, not the data.
-    val noShuf = noShuffleChecks.map { case (name, what) =>
-      val p = plan(name)
-      val exchanges = "(?<!Broadcast)Exchange".r.findAllIn(p).length
-      val rangeExchanges = "rangepartitioning".r.findAllIn(p).length
-      ("no_shuffle:" + name, exchanges <= rangeExchanges,
-        if (exchanges <= rangeExchanges) what else s"unexpected shuffle\n$p")
-    }
-
-    // top-paths: the per-user fold must REUSE the window's user-keyed
-    // hash partitioning — exactly one user-keyed exchange in the plan
-    // (a second one would double the operator's only shuffle)
-    val pathsReuse = {
-      val p = plan("event_top_paths")
-      val userExchanges = "hashpartitioning\\(user_id".r.findAllIn(p).length
-      ("reuse:event_top_paths", userExchanges == 1,
-        if (userExchanges == 1) "window partitioning reused by the fold"
-        else s"expected 1 user-keyed exchange, got $userExchanges\n$p")
-    }
-
-    // Q21: both existence tests fold into ONE orderkey-keyed window —
-    // at most one orderkey exchange (zero when the orders join already
-    // partitioned the stream), never the textbook three self-joins
-    val q21Reuse = {
-      val p = plan("q21_waiting_suppliers")
-      val keyExchanges = "hashpartitioning\\(l_orderkey".r.findAllIn(p).length
-      ("reuse:q21_waiting_suppliers",
-        keyExchanges <= 1 && p.contains("Window"),
-        if (keyExchanges <= 1) "one window, no lineitem self-joins"
-        else s"expected <=1 orderkey exchange, got $keyExchanges\n$p")
-    }
-
-    // fuzzy clustering: node ids are a per-row portable-hash projection —
-    // the plan must carry NO Window operator (a dense rank over all
-    // distinct names would be a single-partition global sort)
-    val fuzzyNoWindow = {
-      val p = plan("fuzzy_name_components")
-      val ok = !p.contains("Window")
-      ("no_window:fuzzy_name_components", ok,
-        if (ok) "hash node ids, no global-sort window" else s"unexpected Window\n$p")
-    }
-
-    // bigram model: the four model branches (bigram/context/unigram/
-    // total) must all read the MATERIALIZED multiplicities relation —
-    // zero corpus FileScans below it (their differing pushed
-    // null-filters defeat ReuseExchange, so recompute = 4 corpus reads)
-    val bigramReuse = {
-      val p = plan("bigram_logppl")
-      val scans = "FileScan".r.findAllIn(p).length
-      ("reuse:bigram_logppl", scans == 0 && p.contains("Scan ExistingRDD"),
-        if (scans == 0) "all branches read the checkpointed multiplicities"
-        else s"expected 0 corpus FileScans below the materialization, got $scans\n$p")
+    val gates = for (q <- gated; (name, g) <- q.checks) yield {
+      val (ok, detail) = g.check(plans(q.name))
+      (name, ok, detail)
     }
 
     // z-order layout: per-file min/max of the NON-leading column must be
     // tight enough that the BETWEEN [100,120] filter's row groups prune
     val zorder = {
       import org.apache.spark.sql.functions._
-      val perFile = spark.read.parquet(SparkEntry.zorderLayout(spark, sfDir))
+      val perFile = spark.read.parquet(EntityQueries.zorderLayout(spark, sfDir))
         .groupBy(input_file_name().as("f"))
         .agg(min("l_partkey").as("lo"), max("l_partkey").as("hi"))
         .collect()
       val overlapping = perFile.count(r => r.getLong(1) <= 120 && r.getLong(2) >= 100)
-      ("layout:zorder_file_stats",
+      (ZorderCheck,
         perFile.length >= 4 && overlapping * 2 < perFile.length,
         s"$overlapping/${perFile.length} files overlap the partkey filter")
     }
 
-    (marker ++ Seq(asof, pathsReuse, q21Reuse, fuzzyNoWindow, bigramReuse) ++
-      nlj ++ noShuf ++ Seq(zorder))
-      .sortBy(_._1)
+    (gates :+ zorder).sortBy(_._1)
   }
 
   def main(args: Array[String]): Unit = {

@@ -29,7 +29,7 @@ object Recall {
         .select("vec_id").collect().map(_.getLong(0)).toSet
     }.toMap
 
-    // the first block mirrors SparkEntry.indexBuilders EXACTLY (the
+    // the first block mirrors KnnQueries.indexBuilders EXACTLY (the
     // battery's served configurations); the lsh-* variants below it are
     // tuning comparisons
     val indexes: Seq[(String, VectorIndex)] = Seq(

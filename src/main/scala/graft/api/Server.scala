@@ -273,14 +273,14 @@ class Server private(spark: SparkSession, base: String, http: HttpServer,
     }
 
   /** JSON rows as a frame to insert into `e`. Once the entity holds data
-    * the rows are read against its stored user schema (`ap_*` system
-    * columns dropped): inferring would widen `int` to `bigint` and
-    * `array<float>` to `array<double>`, and the insert would rewrite the
-    * whole entity to the drifted schema. The first insert, and rows
-    * naming a column the entity lacks, infer types. */
+    * or declared attributes, the rows are read against its user schema:
+    * inferring would widen `int` to `bigint` and `array<float>` to
+    * `array<double>`, and the insert would rewrite the whole entity to
+    * the drifted schema. The first insert into an undeclared entity, and
+    * rows naming a column the entity lacks, infer types. */
   private def jsonRows(e: Entity, rows: Seq[String]): DataFrame = {
     val ds = spark.createDataset(rows)(Encoders.STRING)
-    val stored = StructType(e.read().schema.filterNot(_.name.startsWith("ap_")))
+    val stored = e.userSchema
     val named = rows.iterator.flatMap(r => mapper.readTree(r).fieldNames().asScala).toSet
     if (stored.isEmpty || !named.subsetOf(stored.fieldNames.toSet)) spark.read.json(ds)
     else spark.read.schema(stored).json(ds)
@@ -472,32 +472,10 @@ class Server private(spark: SparkSession, base: String, http: HttpServer,
           case scala.util.Success(rows) =>
             n.put("ok", true)
             n.put("rowCount", rows.length)
+            // collected rows carry their schema: arrays render as JSON
+            // arrays and structs as objects, like every `df.toJSON` reply
             val arr = n.putArray("rows")
-            rows.take(Server.PageSize).foreach { r =>
-              val rn = arr.addObject()
-              r.schema.fieldNames.zipWithIndex.foreach { case (f, i) =>
-                r.get(i) match {
-                  case null => rn.putNull(f)
-                  case v: Long => rn.put(f, v)
-                  case v: Int => rn.put(f, v)
-                  case v: Double => rn.put(f, v)
-                  case v: Float => rn.put(f, v.toDouble)
-                  case v: Boolean => rn.put(f, v)
-                  case v: String => rn.put(f, v)
-                  case v: scala.collection.Seq[_] => // array columns as JSON arrays
-                    val an = rn.putArray(f)
-                    v.foreach {
-                      case e: Long => an.add(e)
-                      case e: Int => an.add(e)
-                      case e: Double => an.add(e)
-                      case e: Float => an.add(e.toDouble)
-                      case e: Boolean => an.add(e)
-                      case e => an.add(String.valueOf(e))
-                    }
-                  case v => rn.put(f, String.valueOf(v)) // structs/maps: rendered
-                }
-              }
-            }
+            rows.take(Server.PageSize).foreach(r => arr.add(mapper.readTree(r.json)))
           case scala.util.Failure(err) =>
             n.put("ok", false)
             n.put("error", String.valueOf(err.getMessage))
@@ -1229,21 +1207,22 @@ class Server private(spark: SparkSession, base: String, http: HttpServer,
           val arr = out.putArray("indexes")
           IndexOps.over(e, attribute).foreach(arr.add)
         } else {
-          val (version, inserts) = e.stamp
-          out.put("count", e.count())
+          val s = e.snapshot
+          val (version, inserts) = s.stamp
+          out.put("count", s.count)
           out.put("version", version)
           out.put("inserts", inserts)
           out.put("layout", e.layout.map(l =>
             if (l.keyCol.nonEmpty) s"${l.mode}(${l.keyCol})" else l.mode)
             .getOrElse("none"))
           val sch = out.putArray("schema")
-          e.read().drop(Entity.ApId).schema.fields.foreach { f =>
+          s.frame.drop(Entity.ApId).schema.fields.foreach { f =>
             val o = sch.addObject()
             o.put("name", f.name)
             o.put("type", f.dataType.simpleString)
           }
           val arr = out.putArray("indexes")
-          e.listIndexes.sorted.foreach(arr.add)
+          s.listIndexes.sorted.foreach(arr.add)
         }
       case "/index/details" =>
         // reference web `GET /index/details`: type, staleness, and the

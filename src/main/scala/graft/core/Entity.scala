@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import com.fasterxml.jackson.databind.JsonNode
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Materialize.Ops
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -22,7 +22,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * reference's write-new-storename-then-drop-old overwrite dance
   * (`StorageHandler.scala:122-170`), crash-safe without a commit
   * protocol. `_meta.json` also records the schema readers see, so a read
-  * never runs a schema-discovery job.
+  * never runs a schema-discovery job; until the first insert it holds
+  * the attributes declared at [[Entity.create]].
   *
   * Reads go through one [[Entity.Snapshot]] per [[stamp]]: the read
   * frame (its file list taken once), the row count (from the parquet
@@ -79,6 +80,10 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
   }
 
   def schema: StructType = snapshot.schema
+
+  /** The user attributes: [[schema]] without the `ap_*` system columns.
+    * Both front doors read inserted rows against it. */
+  def userSchema: StructType = StructType(schema.filterNot(_.name.startsWith("ap_")))
 
   /** Attributes stored outside the primary parquet store, per handler —
     * the reference's per-attribute storage-handler assignment
@@ -139,9 +144,11 @@ class Entity private(val name: String, base: Path, spark: SparkSession) {
 
   /** Version `m`'s rows: the primary store read with its recorded schema
     * (inferred, one Spark job, for a store written before schemas were
-    * recorded), each external attribute group joined back on. */
+    * recorded), each external attribute group joined back on. An empty
+    * entity has no rows, and its declared attributes as columns. */
   private def frameOf(m: Meta, groups: Seq[AttributeGroup]): DataFrame =
-    if (m.version == 0) spark.emptyDataFrame
+    if (m.version == 0) spark.createDataFrame(
+      java.util.Collections.emptyList[Row](), m.schema.getOrElse(new StructType()))
     else {
       val path = dataPath(m.version).toString
       val main = m.schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
@@ -1037,16 +1044,20 @@ object Entity {
       Option(root.get("id")).map(_.asText("")).getOrElse(""))
   }
 
-  /** Create a new empty entity. Reserved `ap_*` names are rejected for
-    * user columns at insert time by construction (we add `ap_id`). */
-  def create(spark: SparkSession, base: String, name: String): Entity = {
+  /** Create a new empty entity, recording its `declared` attributes (if
+    * any) as the schema inserts are read against until the first insert
+    * writes one. Reserved `ap_*` names are rejected for user columns at
+    * insert time by construction (we add `ap_id`). */
+  def create(spark: SparkSession, base: String, name: String,
+             declared: StructType = new StructType()): Entity = {
     require(name.nonEmpty && name.matches("[A-Za-z0-9_]+"), s"invalid entity name: $name")
     val dir = Paths.get(base).resolve(name)
     sharedOf(dir).mutation.synchronized {
       require(!Files.exists(dir), s"entity $name already exists")
       Files.createDirectories(dir)
       writeMeta(dir.resolve("_meta.json"),
-        Meta(name, 0, 0, id = java.util.UUID.randomUUID.toString))
+        Meta(name, 0, 0, schema = Some(declared).filter(_.nonEmpty),
+          id = java.util.UUID.randomUUID.toString))
     }
     new Entity(name, Paths.get(base), spark)
   }

@@ -41,11 +41,6 @@ import graft.operators.{BooleanPredicates, Knn, Projections, SetAlgebra}
 class GraftGrpcServer(spark: SparkSession, base: String) {
   import Proto._
 
-  /** Declared attribute types per entity (set by createEntity) —
-    * the insert path coerces tuple values against this schema. */
-  private val schemas =
-    scala.collection.concurrent.TrieMap.empty[String, StructType]
-
   /** Close the server half of a bidi call whose client stream failed —
     * without this the call would stay half-open for the channel's
     * lifetime (the request observer's onError does NOT auto-terminate
@@ -154,25 +149,25 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
     case (v, _) => v
   }
 
-  private def entitySchema(name: String): StructType =
-    schemas.getOrElseUpdate(name, {
-      val s = Entity.open(spark, base, name).read().drop("ap_id").schema
-      require(s.fields.nonEmpty,
-        s"entity $name is empty and has no declared schema — createEntity " +
-          "with attributes (or insert through another API) first")
-      s
-    })
+  /** The schema inserted tuples are coerced against: the entity's user
+    * attributes, declared at createEntity until the first insert. */
+  private def entitySchema(e: Entity): StructType = {
+    val s = e.userSchema
+    require(s.fields.nonEmpty,
+      s"entity ${e.name} is empty and has no declared schema — createEntity " +
+        "with attributes (or insert through another API) first")
+    s
+  }
 
   private def doInsert(req: DynamicMessage): DynamicMessage = try {
-    val name = str(req, "entity")
-    val schema = entitySchema(name)
+    val e = Entity.open(spark, base, str(req, "entity"))
+    val schema = entitySchema(e)
     val tuplesF = req.getDescriptorForType.findFieldByName("tuples")
     val rows = req.getField(tuplesF).asInstanceOf[java.util.List[_]].asScala.map { t =>
       val data = dataMap(t.asInstanceOf[DynamicMessage], "TupleInsertMessage")
       Row.fromSeq(schema.fields.toSeq.map(f => coerce(data.getOrElse(f.name, null), f.dataType)))
     }
-    val df = spark.createDataFrame(rows.asJava, schema)
-    Entity.open(spark, base, name).insert(df)
+    e.insert(spark.createDataFrame(rows.asJava, schema))
     ackOf(ok = true)
   } catch { case e: Exception => ackOf(ok = false, e.getMessage) }
 
@@ -235,8 +230,7 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
           StructField(str(am, "name"), attributeType(str(am, "attributetype")))
         }
         require(fields.nonEmpty, "no attributes")
-        Entity.create(spark, base, name)
-        schemas.put(name, StructType(fields.toSeq))
+        Entity.create(spark, base, name, StructType(fields.toSeq))
         ackOf(ok = true, name) // reference echoes the entityname on OK
       } catch { case e: Exception => ackOf(ok = false, e.getMessage) }
     }
@@ -263,7 +257,6 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
         // dropping retires the snapshot, which unpersists what
         // CacheEntity/CacheIndex pinned
         Entity.open(spark, base, name).drop()
-        schemas.remove(name)
         ackOf(ok = true)
       } catch { case e: Exception => ackOf(ok = false, e.getMessage) }
     }
@@ -371,7 +364,8 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
         val dims0 = req.getField(d.findFieldByName("dims")).asInstanceOf[Int]
         val dims = if (dims0 <= 0) 16 else dims0
         require(n > 0, "ntuples must be positive")
-        val schema = entitySchema(name)
+        val e = Entity.open(spark, base, name)
+        val schema = entitySchema(e)
         // deterministic per-type filler (xxhash-derived, like RandomData)
         val df0 = spark.range(n).toDF()
         val df = schema.fields.foldLeft(df0) { (acc, f) =>
@@ -390,7 +384,7 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
             case other => throw new IllegalArgumentException(s"cannot fill $other")
           })
         }.select(schema.fieldNames.map(col).toSeq: _*)
-        Entity.open(spark, base, name).insert(df)
+        e.insert(df)
         ackOf(ok = true, n.toString)
       } catch { case e: Exception => ackOf(ok = false, e.getMessage) }
     }
@@ -495,7 +489,6 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
     u("SparsifyEntity", "SparsifyEntityMessage", "AckMessage") { req =>
       try {
         Entity.open(spark, base, str(req, "entity")).sparsify(str(req, "attribute"))
-        schemas.remove(str(req, "entity")) // stored schema changed shape
         ackOf(ok = true)
       } catch { case e: Exception => ackOf(ok = false, e.getMessage) }
     }
@@ -621,8 +614,7 @@ class GraftGrpcServer(spark: SparkSession, base: String) {
             val path = str(req, "path")
             ProtoImportExport.listCatalogs(spark, path).foreach { name =>
               val a = try {
-                val e = ProtoImportExport.importEntity(spark, base, path, name)
-                schemas.remove(e.name)
+                ProtoImportExport.importEntity(spark, base, path, name)
                 ackOf(ok = true, name)
               } catch { case ex: Exception => ackOf(ok = false, ex.getMessage) }
               obs.onNext(a)

@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * `functions._` expressions (regex extract/replace + higher-order
   * array ops), so at 100 TB they fuse into the scan under whole-stage
   * codegen — zero shuffle, zero UDF. The same steps replay in any SQL
-  * engine (the DuckDB oracles in SparkEntry are the proof), so URL
-  * normalization done here matches normalization done by an ingest
+  * engine (the `url_*` DuckDB oracles in `TextQueries` are the proof),
+  * so URL normalization done here matches normalization done by an ingest
   * service elsewhere — the property that makes URL-keyed dedup safe
   * across systems.
   */

@@ -68,6 +68,29 @@ class ServingCoreSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     e.count() shouldBe 102
   }
 
+  test("a gRPC-declared schema lives in the entity: HTTP inserts first, a new server inserts") {
+    def userTypes(name: String) = Entity.open(spark, base, name).read().drop(Entity.ApId)
+      .schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq
+
+    declare("declaredfirst")
+    val ins = post("/entity/insert",
+      s"""{"name":"declaredfirst","rows":[${jsonRow(0)},${jsonRow(1)}]}""")
+    withClue(ins.toString) { ins.get("ok").asBoolean() shouldBe true }
+    client.insert("declaredfirst", grpcRows(2 until 10)).get
+    Entity.open(spark, base, "declaredfirst").stamp._1 shouldBe 1 // appended, not rewritten
+    userTypes("declaredfirst") shouldBe Seq("rid" -> "int", "vec" -> "array<float>")
+    Entity.open(spark, base, "declaredfirst").count() shouldBe 10
+
+    // the declaration survives the server that took it
+    declare("declaredempty")
+    val restarted = new GraftGrpcServer(spark, base).startNetty(0)
+    val second = GraftClient.connect("localhost", restarted.getPort)
+    try second.insert("declaredempty", grpcRows(0 until 5)).get
+    finally { second.close(); restarted.shutdownNow() }
+    userTypes("declaredempty") shouldBe Seq("rid" -> "int", "vec" -> "array<float>")
+    Entity.open(spark, base, "declaredempty").count() shouldBe 5
+  }
+
   test("concurrent inserts through gRPC, HTTP and the library get distinct ap_ids") {
     declare("racing")
     client.insert("racing", grpcRows(0 until 10)).get
